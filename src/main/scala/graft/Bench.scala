@@ -6,7 +6,8 @@ import org.apache.spark.sql.SparkSession
   * scale factor in SPARK_GRAFT_SF_DIR, writes the full per-query record
   * to bench_out.json, and prints ONE SHORT JSON line to stdout.
   *
-  * local[32] + shuffle.partitions=32 mirrors the driver's bench rig; AQE
+  * local[N] + shuffle.partitions=N, N = SPARK_GRAFT_CPUS or else the
+  * host's available processors (the recorded baselines ran N=32); AQE
   * stays on (it is what re-plans skew/small partitions at cluster scale,
   * so benching with it off would measure a plan we'd never run).
   * Each query executes via a `noop`-format write (round-4 fix): count()
@@ -131,7 +132,8 @@ object Bench {
     val tMain = System.nanoTime()
     def elapsedSec: Double = (System.nanoTime() - tMain) / 1e9
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
+      Runtime.getRuntime.availableProcessors.toString)
     val reps = sys.env.getOrElse("SPARK_GRAFT_REPS", "3").toInt
     val budgetSec = sys.env.getOrElse("SPARK_GRAFT_BUDGET_SEC", "2700").toDouble
     val fullWarmup = sys.env.get("SPARK_GRAFT_WARMUP").contains("1")

@@ -18,7 +18,9 @@ import org.apache.spark.sql.{Dataset, SaveMode, SparkSession}
   *    contract as the reference's `exec python3 -c` + stdin feeder
   *    (cmd/azure/azure_util.go:158-226), and the one place the RDD API is
   *    genuinely the right layer (opaque user code, per-partition
-  *    imperative I/O);
+  *    imperative I/O). Both pipe directions are UTF-8, not the JVM's
+  *    default charset: under an ASCII default every curly apostrophe
+  *    would reach the script as `?` (PipeCharsetSpec);
   *  - the shuffle+sort is `repartitionAndSortWithinPartitions` with a
   *    `HashPartitioner(R)` — one shuffle that both partitions and sorts,
   *    matching the reference's FNV-hash bucket write + reduce-side
@@ -82,7 +84,8 @@ object MRJob {
       * sorted `key\tvalue` lines through `cmd` stdin, parses stdout lines
       * back as tab-KV, dropping malformed lines like reducer.py:25-27. */
     def reduceScript(cmd: Seq[String]): Keyed =
-      Keyed(spark, rdd.map(KVCodec.encode).pipe(cmd).flatMap(KVCodec.decode(_)))
+      Keyed(spark, rdd.map(KVCodec.encode).pipe(cmd, encoding = "UTF-8")
+        .flatMap(KVCodec.decode(_)))
 
     /** Shuffle-free aggregation upgrade the reference cannot express:
       * map-side partial combine (reference shuffles one line per token). */
@@ -114,5 +117,6 @@ object MRJob {
     * reference, whose per-shard goroutines interleave nondeterministically
     * — SURVEY §2.1 quirks — so any script correct there is correct here). */
   def mapScript(lines: Dataset[String], cmd: Seq[String]): Keyed =
-    Keyed(lines.sparkSession, lines.rdd.pipe(cmd).flatMap(KVCodec.decode(_)))
+    Keyed(lines.sparkSession, lines.rdd.pipe(cmd, encoding = "UTF-8")
+      .flatMap(KVCodec.decode(_)))
 }

@@ -1,5 +1,6 @@
 package graft.operators
 
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.core.Tables
@@ -320,86 +321,123 @@ object Dedup {
     * large-star / small-star algorithm (Kiveris et al., "Connected
     * Components in MapReduce and Beyond", SoCC'14) — O(log² n) rounds
     * regardless of component diameter, vs rounds ∝ diameter for plain
-    * min-label propagation. Each round:
+    * min-label propagation. Output: one bigint (n, l) row per node that
+    * has an edge to another node, l = the smallest id of n's component
+    * (roots label themselves); self-loops and null endpoints are dropped.
     *
+    * The fixpoint runs on the MapReduce primitive of [[graft.mr.MRJob]]
+    * (hash shuffle → per-partition sort → streaming reduce) over an
+    * `RDD[(hi, lo)]`, hi > lo:
+    *
+    *  - entry contraction: a union-find inside each input partition
+    *    (no shuffle) replaces the partition's edges by stars
+    *    node → partition-local component min. Every component and its
+    *    minimum survive; components that live in one partition arrive
+    *    as finished stars (the local-reduction-then-global-merge
+    *    pattern of "MapReduce Algorithms for Big Data Analysis",
+    *    VLDB'12). Memory: one map entry per distinct endpoint of the
+    *    input partition, so it is bounded by the input split;
     *  - large-star: every node u repoints its strictly-LARGER neighbors
     *    at m(u) = min(Γ(u) ∪ {u}) — long chains collapse geometrically;
     *  - small-star: every node u repoints its smaller-or-equal neighbors
     *    (and itself) at the min of that set — stars tighten to the root.
     *
-    * Fixpoint = the edge set is a union of stars (hi → component min),
-    * detected with ONE aggregate over the round's (already
-    * locally-checkpointed, so cached) output: (count, bit_xor(xxhash64)).
-    * The fingerprint is a FAST-PATH PRE-FILTER only: on a match, one
-    * exact set comparison over the two cached frames (next ⊆ e with
-    * equal counts ⇔ equal sets, both being duplicate-free) confirms
-    * convergence, so a ~2⁻⁶⁴ fingerprint collision between different
-    * consecutive edge sets can delay detection by a round but can never
-    * terminate early with wrong labels. Non-matching rounds — all but
-    * the last — still pay only the cached-scan aggregate, never a
-    * diff-join.
-    * Lineage is truncated per round with localCheckpoint, else plans grow
-    * exponentially. All data stays distributed; the driver sees only the
-    * per-round fingerprint. */
+    * Each star is one `repartitionAndSortWithinPartitions` pass sorted
+    * by (key, value) — the secondary sort of [[graft.mr.MRJob.Keyed.partitionSort]]
+    * — so a key's run arrives with its minimum first and the reduce
+    * side streams it with no per-key buffer; a hot star root spills in
+    * the shuffle sort instead of being grouped in memory. A round is
+    * the two passes, a distinct and a `localCheckpoint`, materialized
+    * by ONE `aggregate` job that returns the round's fingerprint
+    * (count, xor of a 64-bit edge hash); with no joins left to plan,
+    * AQE has nothing to re-plan between rounds. The fixpoint is reached
+    * when the edge set is a union of stars hi → component min. The
+    * fingerprint is a pre-filter only: on a match one exact set check
+    * (next ⊆ prev with equal counts ⇔ equal sets, both duplicate-free,
+    * one `subtract` + `count` job) confirms convergence, so a ~2⁻⁶⁴
+    * collision can delay detection by a round but never ends it with
+    * wrong labels. A call therefore costs (rounds + 1) jobs after the
+    * input's own; the driver sees only the fingerprints. The round
+    * partition count is `spark.sql.shuffle.partitions`. */
   def connectedComponents(edges: DataFrame): DataFrame = {
-    // canonical orientation (hi > lo), deduped — self-loops dropped.
-    // ROUND-16 (guide §1.2 step 1 — fewer actions): localCheckpoints here
-    // are LAZY; the round's fingerprint aggregate (and the entry isEmpty)
-    // is the action that materializes them, so each round pays ONE job
-    // where eager-checkpoint-then-aggregate paid two. At bench SF the CC
-    // keys are scheduler-bound (~30-80 ms/job × rounds × consumers); at
-    // 100 TB the saved job is a full extra pass over the round's edge set.
-    var e = edges
-      .select(greatest(col("a"), col("b")).as("hi"), least(col("a"), col("b")).as("lo"))
-      .where(col("hi") =!= col("lo")).distinct()
-      .localCheckpoint(eager = false)
+    val s = edges.sparkSession
+    val parts = s.conf.get("spark.sql.shuffle.partitions").toInt
+    val byKey = new org.apache.spark.HashPartitioner(parts) {
+      override def getPartition(key: Any): Int =
+        super.getPartition(key.asInstanceOf[(Long, Long)]._1)
+    }
+    // one star pass: f(key, min value of the key's run, value) for every
+    // distinct value of the run, in ascending order
+    def starPass(kv: RDD[(Long, Long)])(
+        f: (Long, Long, Long) => Option[(Long, Long)]): RDD[(Long, Long)] =
+      kv.map((_, ())).repartitionAndSortWithinPartitions(byKey).mapPartitions { it =>
+        var key, first, prev = 0L
+        var started = false
+        it.flatMap { case ((k, v), _) =>
+          if (!started || k != key) {
+            started = true; key = k; first = v; prev = v; f(k, v, v)
+          } else if (v != prev) { prev = v; f(k, first, v) }
+          else None
+        }
+      }
+    var e = edges.select(col("a").cast("long"), col("b").cast("long")).rdd
+      .mapPartitions(rows => localStars(rows.collect {
+        case r if !r.isNullAt(0) && !r.isNullAt(1) => (r.getLong(0), r.getLong(1))
+      }))
     var prev: (Long, Long) = (-1L, -1L)
-    var done = e.isEmpty // materializes the entry checkpoint
+    var done = false
     while (!done) {
-      // ROUND-16 (guide §2.4 — remove shuffles outright): each star is a
-      // WINDOW aggregate instead of groupBy + join-back. min over the
-      // partition attaches each row's group minimum directly, so a round
-      // is exchange(u)+window, exchange(hi)+window, distinct — no join
-      // builds, no join-strategy planning, about half the AQE stage-jobs
-      // of the groupBy+join form (the rounds are scheduler-bound at bench
-      // SF; at scale the saved work is a join pass per star). Row-set
-      // equivalence to the join form: nbrs' (u,v) rows are unique (e is
-      // distinct and canonically hi>lo), per-row m-attach then filter
-      // emits exactly the joined rows; for small-star, every hi-group
-      // contains a row with lo = m (the min is attained), and rewriting
-      // THAT row to (hi, m) — others to (lo, m) — reproduces
-      // {(lo,m) : lo≠m} ∪ {(hi,m)} up to the same trailing distinct.
-      val nbrs = e.select(col("hi").as("u"), col("lo").as("v"))
-        .union(e.select(col("lo").as("u"), col("hi").as("v")))
-      // large-star over the symmetric neighborhood
-      val wU = org.apache.spark.sql.expressions.Window.partitionBy(col("u"))
-      val ls = nbrs
-        .withColumn("m", least(col("u"), min(col("v")).over(wU)))
-        .where(col("v") > col("u"))
-        .select(col("v").as("hi"), col("m").as("lo")) // v > u ≥ m ⇒ hi > lo
-      // small-star over the hi → lo orientation
-      val wH = org.apache.spark.sql.expressions.Window.partitionBy(col("hi"))
-      val next = ls
-        .withColumn("m", min(col("lo")).over(wH))
-        .select(
-          when(col("lo") === col("m"), col("hi")).otherwise(col("lo")).as("hi"),
-          col("m").as("lo")) // lo > m in the rewrite branch; hi > m always
-        .distinct()
-        .localCheckpoint(eager = false)
-      // bit_xor: order-independent, overflow-free under ANSI (sum is not).
-      // This aggregate materializes `next`'s checkpoint — one job/round.
-      val fp = next.agg(count(lit(1)), bit_xor(xxhash64(col("hi"), col("lo"))))
-        .head()
-      val cur = (fp.getLong(0), if (fp.isNullAt(1)) 0L else fp.getLong(1))
-      // fingerprint match ⇒ confirm exactly on the cached frames (counts
-      // already equal, sets duplicate-free: next ⊆ e ⇔ next = e)
-      done = cur._1 == 0L || (cur == prev && next.exceptAll(e).isEmpty)
+      val ls = starPass(e.flatMap { case (hi, lo) => Iterator((hi, lo), (lo, hi)) }) {
+        (u, m, v) => if (v > u) Some((v, math.min(u, m))) else None
+      }
+      val next = starPass(ls) {
+        (hi, m, lo) => Some(if (lo == m) (hi, m) else (lo, m)) // lo > m; hi > m
+      }.distinct(parts).localCheckpoint()
+      val cur = next.aggregate((0L, 0L))(
+        (acc, x) => (acc._1 + 1, acc._2 ^ edgeHash(x._1, x._2)),
+        (x, y) => (x._1 + y._1, x._2 ^ y._2))
+      done = cur._1 == 0L || (cur == prev && next.subtract(e, parts).count() == 0L)
       prev = cur
       e = next
     }
     // fixpoint edges are stars hi → component-min; roots label themselves
-    e.select(col("hi").as("n"), col("lo").as("l"))
-      .union(e.select(col("lo"), col("lo")).distinct().toDF("n", "l"))
+    val labels = e.union(e.map(_._2).distinct(parts).map(l => (l, l)))
+    s.createDataFrame(labels).toDF("n", "l")
+  }
+
+  /** Partition-local union-find of [[connectedComponents]]: every
+    * endpoint that is not its component's root, as (node, root). Union
+    * by min keeps each root its component's smallest id; path halving
+    * keeps `find` iterative. */
+  private def localStars(edges: Iterator[(Long, Long)]): Iterator[(Long, Long)] = {
+    val parent = scala.collection.mutable.LongMap.empty[Long]
+    def find(x0: Long): Long = {
+      var x = x0
+      var p = parent.getOrElseUpdate(x, x)
+      while (p != x) {
+        val g = parent(p)
+        parent(x) = g
+        x = g
+        p = parent(x)
+      }
+      x
+    }
+    edges.foreach { case (a, b) =>
+      if (a != b) {
+        val (ra, rb) = (find(a), find(b))
+        if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
+      }
+    }
+    parent.keysIterator.flatMap { n => val r = find(n); if (r != n) Some((n, r)) else None }
+  }
+
+  /** 64-bit mix of an edge (the SplitMix64 finalizer over hi·φ + lo):
+    * the per-edge term of the CC round fingerprint. */
+  private def edgeHash(hi: Long, lo: Long): Long = {
+    var h = hi * 0x9E3779B97F4A7C15L + lo
+    h = (h ^ (h >>> 30)) * 0xBF58476D1CE4E5B9L
+    h = (h ^ (h >>> 27)) * 0x94D049BB133111EBL
+    h ^ (h >>> 31)
   }
 
   /** Session-materialized CAPPED verified EDGE artifact — the edge list

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.core.Tables
@@ -634,12 +634,12 @@ object SimSearch {
     * triples BY CONSTRUCTION (it is the search frontier, not data; the
     * bounded-collect class, like the K×dim centroid folds), which is
     * exactly what an HNSW searcher's candidate heap is. Each round is
-    * then ONE distributed action: the hop scan, PARTITION-PRUNED to the
-    * frontier's buckets, joined against the broadcast frontier and the
-    * broadcast query batch — the frontier's adjacency lists are read,
-    * not the graph; neighbor embeddings ride the edges, so nothing
-    * rejoins the corpus; the top-beam merge is a driver-side fold over
-    * ≤ |Q|·beam·2k rows. Honest 100 TB note (SCALE.md): unlike the IVF
+    * then ONE job: a scan of the adjacency PARTITION-PRUNED to the
+    * frontier's buckets and filtered to the frontier's nodes — the
+    * frontier's adjacency lists are read, not the graph; neighbor
+    * embeddings ride the edges, so nothing rejoins the corpus; the
+    * top-beam merge is a driver-side fold over ≤ |Q|·beam·2k rows (see
+    * [[graphAnnSearch]]). Honest 100 TB note (SCALE.md): unlike the IVF
     * probe, hop I/O tracks frontier LOCALITY, not a fixed nprobe/C
     * fraction — graph-ANN is a random-access structure, and this
     * partition-pruned rendition is as close as scan-oriented dataflow
@@ -656,11 +656,20 @@ object SimSearch {
     graphAnnSearch(graphAnnIndexShared(s, d), queries, seeds, k, beam, rounds)
   }
 
-  /** The beam-search core, generic over (adjacency, queries, seeds) —
-    * shared by [[graphAnnTopK]] (the fixed query batch over the
-    * full-corpus graph) and [[graphAnnIncremental]] (delta vectors over
-    * the BASE graph — HNSW's insert path IS a search). Returns
-    * (q_id, n_id, rk), self-pairs excluded, ranks 1..k. */
+  /** The driver-heap beam-search core over (adjacency, queries, seeds),
+    * behind [[graphAnnTopK]]. Returns (q_id, n_id, rk), self-pairs
+    * excluded, ranks 1..k.
+    *
+    * The query batch is collected once per call — |Q|×dim floats, bounded
+    * by construction like the beam itself — and rides every scan as a
+    * `typedLit` map q_id → q_emb. The entry seeds and each hop are then
+    * ONE job apiece, with no join and no broadcast to plan: a hop is the
+    * adjacency scan pruned to `bucket IN (frontier buckets) AND
+    * src IN (frontier nodes)`, each edge fanned out to the queries whose
+    * beam holds its src (a `typedLit` map src → q_ids), scored with the
+    * same `vec_cos` kernel as [[graphAnnSearchDistributed]], so the two
+    * variants stay bit-identical (SimSearchSpec). A call costs
+    * rounds + 2 jobs. */
   private def graphAnnSearch(adj: DataFrame, queries: DataFrame,
       seeds: DataFrame, k: Int, beam: Int, rounds: Int): DataFrame = {
     val s = adj.sparkSession
@@ -671,28 +680,27 @@ object SimSearch {
       .groupBy(x => (x._1, x._2)).values.map(_.head).toSeq // dedup (q, n)
       .groupBy(_._1).values.flatMap(
         _.sortBy(x => (-x._3, x._2)).take(width)).toSeq
-    // entry points (HNSW's upper layer role — spread the starts),
-    // scored in one action
-    var best = topBeam(
-      broadcast(queries).crossJoin(broadcast(seeds))
-        .select($"q_id", $"n_id",
-          VectorFunctions.cosine($"q_emb", $"n_emb").as("cos"))
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq,
-      beam)
+    val qEmb = typedLit(queries.select($"q_id", $"q_emb").collect()
+      .map(r => r.getLong(0) -> r.getSeq[Float](1)).toMap)
+    // every row of `rows` scored against each query id in `qIds`
+    def score(rows: DataFrame, qIds: Column, nId: Column, nEmb: Column) = rows
+      .select(explode(qIds).as("q_id"), nId.as("n_id"), nEmb.as("n_emb"))
+      .select($"q_id", $"n_id",
+        VectorFunctions.cosine(element_at(qEmb, $"q_id"), $"n_emb").as("cos"))
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq
+    // entry points (HNSW's upper layer role — spread the starts)
+    var best = topBeam(score(seeds, map_keys(qEmb), $"n_id", $"n_emb"), beam)
     for (_ <- 1 to rounds) {
+      val frontier = best.groupBy(_._2).map { case (n, xs) => n -> xs.map(_._1) }
       // bucket literals as Int: the partition column reads back through
       // partition-type inference as IntegerType, and Long literals would
       // wrap the partition attribute in a cast — pruning would then hang
       // on Spark's cast-unwrapping instead of a plain In (ADVICE r14; the
       // pruning law in SimSearchSpec pins this with inputFiles)
-      val buckets = best.map(x => (x._2 % GraphAnnBuckets).toInt).distinct
-      val frontier = best.map(x => (x._1, x._2)).toDF("q_id", "src")
-      val hops = adj.where($"bucket".isin(buckets: _*))
-        .join(broadcast(frontier), Seq("src"))
-        .join(broadcast(queries), Seq("q_id"))
-        .select($"q_id", $"dst".as("n_id"),
-          VectorFunctions.cosine($"q_emb", $"dst_emb").as("cos"))
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
+      val buckets = frontier.keys.map(n => (n % GraphAnnBuckets).toInt).toSeq.distinct
+      val hops = score(
+        adj.where($"bucket".isin(buckets: _*) && $"src".isin(frontier.keys.toSeq: _*)),
+        element_at(typedLit(frontier), $"src"), $"dst", $"dst_emb")
       best = topBeam(best ++ hops, beam)
     }
     topBeam(best.filter(x => x._1 != x._2), k)

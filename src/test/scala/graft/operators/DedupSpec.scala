@@ -62,6 +62,33 @@ class DedupSpec extends SparkSpec {
     assert(r.isEmpty)
   }
 
+  /** Driver union-find, always attaching the larger root under the
+    * smaller → every tree's root is its component's min node id. Labels
+    * every endpoint of a non-self-loop edge, the CC output contract. */
+  private def unionFindLabels(edges: Seq[(Long, Long)]): Map[Long, Long] = {
+    val parent = scala.collection.mutable.Map.empty[Long, Long]
+    def find(x: Long): Long = {
+      var r = parent.getOrElseUpdate(x, x)
+      while (parent(r) != r) r = parent(r)
+      parent(x) = r
+      r
+    }
+    edges.filter(e => e._1 != e._2).foreach { case (a, b) =>
+      val (ra, rb) = (find(a), find(b))
+      if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
+    }
+    parent.keys.map(v => v -> find(v)).toMap
+  }
+
+  /** CC labels as a map, asserting one row per node. */
+  private def ccLabels(edges: org.apache.spark.sql.DataFrame): Map[Long, Long] = {
+    val rows = Dedup.connectedComponents(edges).collect()
+      .map(r => r.getLong(0) -> r.getLong(1))
+    val got = rows.toMap
+    assert(rows.length == got.size, "a node carries more than one label row")
+    got
+  }
+
   test("connectedComponents matches union-find on random graphs") {
     import spark.implicits._
     val rnd = new scala.util.Random(7)
@@ -69,21 +96,41 @@ class DedupSpec extends SparkSpec {
       val n = 40
       val edges = Seq.fill(60)((rnd.nextInt(n).toLong, rnd.nextInt(n).toLong))
         .filter(e => e._1 != e._2)
-      // reference union-find, always attaching the larger root under the
-      // smaller → every tree's root is its component's min node id
-      val parent = Array.tabulate(n)(identity)
-      def find(x: Int): Int =
-        if (parent(x) == x) x else { parent(x) = find(parent(x)); parent(x) }
-      edges.foreach { case (a, b) =>
-        val (ra, rb) = (find(a.toInt), find(b.toInt))
-        if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
-      }
-      val want = edges.flatMap(e => Seq(e._1, e._2)).distinct
-        .map(v => v -> find(v.toInt).toLong).toMap
-      val got = Dedup.connectedComponents(edges.toDF("a", "b"))
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      assert(got === want, s"trial $trial")
+      assert(ccLabels(edges.toDF("a", "b")) === unionFindLabels(edges), s"trial $trial")
     }
+  }
+
+  test("connectedComponents labels are independent of input partitioning, " +
+    "row order and spark.sql.shuffle.partitions") {
+    import spark.implicits._
+    val rnd = new scala.util.Random(29)
+    val random = (1 to 3).map(_ => Seq.fill(300)((rnd.nextInt(200).toLong, rnd.nextInt(200).toLong)))
+    val path = rnd.shuffle((1L until 500L).map(i => (i, i + 1)))
+    val star = rnd.shuffle((1L to 2000L).map(i => (0L, i * 7 + 3)))
+    // five 60-edge chains over interleaved ids: round-robin repartition
+    // spreads every chain over all five input partitions (checked below)
+    val spanning = (0 until 5).flatMap(c => (0 until 60).map(i => ((i * 5 + c).toLong, ((i + 1) * 5 + c).toLong)))
+    val spanIn = spanning.toDF("a", "b").repartition(5)
+    val partsPerChain = spanIn.select(($"a" % 5).as("c"), spark_partition_id().as("p"))
+      .distinct().groupBy($"c").count().collect().map(_.getLong(1))
+    assert(partsPerChain.length == 5 && partsPerChain.forall(_ == 5),
+      s"premise: every chain must span all 5 input partitions, got ${partsPerChain.toSeq}")
+    val key = "spark.sql.shuffle.partitions"
+    val saved = spark.conf.get(key)
+    try {
+      for (parts <- Seq(1, 3, 7)) {
+        spark.conf.set(key, parts.toString)
+        for ((g, name) <- (random :+ path :+ star :+ spanning)
+            .zip(Seq("random1", "random2", "random3", "path", "star", "spanning"))) {
+          assert(ccLabels(g.toDF("a", "b").repartition(5)) === unionFindLabels(g),
+            s"$name at shuffle.partitions=$parts")
+        }
+        assert(ccLabels(Seq.empty[(Long, Long)].toDF("a", "b").repartition(5)).isEmpty,
+          s"empty edge set at shuffle.partitions=$parts")
+        assert(ccLabels(Seq((1L, 1L), (2L, 2L)).toDF("a", "b").repartition(5)).isEmpty,
+          s"self-loops only at shuffle.partitions=$parts")
+      }
+    } finally spark.conf.set(key, saved)
   }
 
   test("prefix-filtered ngram jaccard equals the exhaustive all-pairs result") {

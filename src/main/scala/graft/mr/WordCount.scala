@@ -52,11 +52,30 @@ object WordCount {
       .select($"word", $"cnt".cast("bigint").as("cnt"))
   }
 
-  /** Word count through the SCRIPT-pipe path, running the reference's own
-    * mapper.py/reducer.py unmodified — byte-level UDF parity, hash-checked
-    * against the same SQL oracle. The scripts dir is configurable
-    * (`spark.graft.mr.scriptsDir`), defaulting to the reference checkout.
-    * Mapper input is coalesced (no shuffle) to M=8 shards to mirror the
+  /** The shipped word-count script `name` (`mapper.py` or `reducer.py`,
+    * classpath resources following the reference pair's tokenizer and
+    * sorted-group sum, FIXTURES.md §A), as source text. */
+  def shippedScript(name: String): String = {
+    val in = getClass.getResourceAsStream(s"/graft/mr/$name")
+    require(in != null, s"no shipped script $name")
+    try new String(in.readAllBytes(), java.nio.charset.StandardCharsets.UTF_8)
+    finally in.close()
+  }
+
+  /** The pipe command of word-count script `name`: `python3 <dir>/<name>`
+    * when `spark.graft.mr.scriptsDir` names a dir, else the shipped script
+    * run as `python3 -c <text>` (no file, no dependence on the cwd). */
+  private def scriptCommand(s: SparkSession, name: String): Seq[String] =
+    s.conf.getOption("spark.graft.mr.scriptsDir") match {
+      case Some(dir) => Seq("python3", s"$dir/$name")
+      case None => Seq("python3", "-c", shippedScript(name))
+    }
+
+  /** Word count through the SCRIPT-pipe path: a mapper.py/reducer.py pair
+    * piped as user scripts — byte-level UDF parity, hash-checked against
+    * the same SQL oracle. The pair is the shipped one unless
+    * `spark.graft.mr.scriptsDir` points at another. Mapper input is
+    * coalesced (no shuffle) to M=8 shards to mirror the
     * reference's one-process-per-shard model: the pipe forks a Python
     * interpreter per partition, so fork startup must amortize over
     * shard-sized inputs, not over however many file splits the scan
@@ -64,12 +83,10 @@ object WordCount {
     * startups for milliseconds of actual mapping. */
   def mrScript(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    val scripts = s.conf.getOption("spark.graft.mr.scriptsDir")
-      .getOrElse("/root/reference/client/scripts")
     val lines = Tables.documents(s, d).select("text").as[String].coalesce(8)
-    MRJob.mapScript(lines, Seq("python3", s"$scripts/mapper.py"))
+    MRJob.mapScript(lines, scriptCommand(s, "mapper.py"))
       .partitionSort(8)
-      .reduceScript(Seq("python3", s"$scripts/reducer.py"))
+      .reduceScript(scriptCommand(s, "reducer.py"))
       .toDF("word", "cnt")
       .select($"word", $"cnt".cast("bigint").as("cnt"))
   }

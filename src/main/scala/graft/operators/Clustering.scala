@@ -2,7 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.core.Tables
+import graft.core.{SessionArtifacts, Tables}
 
 /** Distributed k-means (Lloyd) over the embeddings table — the training
   * step behind every IVF index build and corpus-partitioning pipeline
@@ -131,16 +131,8 @@ object Clustering {
     * cell-probing consumers (dbscan_ivf). */
   private[graft] def lloydCellsShared(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    val srcKey = "spark.graft.lloydcells.src"
-    val dirKey = "spark.graft.lloydcells.dir"
-    if (!s.conf.getOption(srcKey).contains(d)) {
-      val dir = java.nio.file.Files.createTempDirectory("graft_lloyd_cells").toString
-      lloyd(quantized(s, d))._1.select($"vec_id", $"cluster")
-        .write.mode("overwrite").parquet(dir)
-      graft.core.SessionArtifacts.resetDir(s, dirKey, dir)
-      s.conf.set(srcKey, d)
-    }
-    s.read.parquet(s.conf.get(dirKey))
+    SessionArtifacts.parquet(s, "lloydcells", d)(
+      lloyd(quantized(s, d))._1.select($"vec_id", $"cluster"))
   }
 
   /** Exact-integer nearest-centroid assignment of any (vec_id, e) frame
@@ -444,10 +436,7 @@ object Clustering {
   def indexDelta(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     val vecBucket = Maintenance.md5Hex32Col($"vec_id") % 100
-    val srcKey = "spark.graft.ivfindex.src"
-    val dirKey = "spark.graft.ivfindex.dir"
-    if (!s.conf.getOption(srcKey).contains(d)) {
-      val dir = java.nio.file.Files.createTempDirectory("graft_ivf_index").toString
+    val idx = SessionArtifacts.parquet(s, "ivfindex", d) {
       val (assignedBase, cents) = lloyd(quantized(s, d).where(vecBucket < 90))
       val stats = assignedBase.groupBy($"cluster")
         .agg(count(lit(1)).as("n_base"), sum($"d").as("sum_d_base"))
@@ -457,11 +446,7 @@ object Clustering {
         .select($"cluster", $"e",
           coalesce($"n_base", lit(0L)).as("n_base"),
           coalesce($"sum_d_base", lit(0L)).cast("bigint").as("sum_d_base"))
-        .write.mode("overwrite").parquet(dir)
-      graft.core.SessionArtifacts.resetDir(s, dirKey, dir)
-      s.conf.set(srcKey, d)
-    }
-    val idx = s.read.parquet(s.conf.get(dirKey)).localCheckpoint(eager = false)
+    }.localCheckpoint(eager = false)
     // K×dim bounded driver traffic — the published centroid matrix
     val cents: Array[Seq[Long]] = idx.orderBy($"cluster")
       .select($"e").as[Seq[Long]].collect()

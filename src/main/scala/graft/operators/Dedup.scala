@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.core.Tables
+import graft.core.{SessionArtifacts, Tables}
 import graft.functions.VectorFunctions
 
 /** Deduplication operators for LLM-data pipelines (SURVEY.md §2.3 J):
@@ -286,22 +286,10 @@ object Dedup {
     * being measured (dedup_minhash_clusters' edge list; dedup_simhash's
     * recall denominator — round 2 recomputed the entire
     * signature+LSH+verify pipeline per consumer and it was the driver
-    * bench's #2 cost). The pairs are WRITTEN to a temp parquet once per
-    * (session, dir) — a few hundred rows of (id, id, jac), never
-    * signatures or text — and memoized via session conf (same pattern as
-    * the bucketed tables / ngram index: the memo dies with the session,
-    * no JVM-lifetime retention of sessions or cached frames). */
-  def minhashLshShared(s: SparkSession, d: String): DataFrame = {
-    val srcKey = "spark.graft.minhashpairs.src"
-    val dirKey = "spark.graft.minhashpairs.dir"
-    if (!s.conf.getOption(srcKey).contains(d)) {
-      val dir = java.nio.file.Files.createTempDirectory("graft_minhash_pairs").toString
-      minhashLsh(s, d).write.mode("overwrite").parquet(dir)
-      graft.core.SessionArtifacts.resetDir(s, dirKey, dir)
-      s.conf.set(srcKey, d)
-    }
-    s.read.parquet(s.conf.get(dirKey))
-  }
+    * bench's #2 cost). The pairs are a session artifact: a few hundred
+    * rows of (id, id, jac), never signatures or text. */
+  def minhashLshShared(s: SparkSession, d: String): DataFrame =
+    SessionArtifacts.parquet(s, "minhashpairs", d)(minhashLsh(s, d))
 
   /** Core MinHash-LSH pipeline over any (doc_id, text) frame. The
     * signature path runs entirely through the two codegen expressions
@@ -442,8 +430,8 @@ object Dedup {
 
   /** Session-materialized CAPPED verified EDGE artifact — the edge list
     * the LABEL keys cluster over, built through [[lshCandidatesCapped]]
-    * (population-capped band join) + the jac ≥ 0.9 verify, memoized to a
-    * temp parquet per (session, dir) exactly like [[minhashLshShared]].
+    * (population-capped band join) + the jac ≥ 0.9 verify, a session
+    * artifact like [[minhashLshShared]].
     * Kept SEPARATE from the pairs artifact on purpose: the pairs keys
     * (`dedup_minhash`, the graph_* family, simhash's recall denominator)
     * publish the exhaustive verified PAIR SET — output-quadratic on
@@ -453,19 +441,12 @@ object Dedup {
     * identical edge sets and the full-recompute oracles stay the gate. */
   def minhashEdgesShared(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    val srcKey = "spark.graft.minhashedges.src"
-    val dirKey = "spark.graft.minhashedges.dir"
-    if (!s.conf.getOption(srcKey).contains(d)) {
-      val dir = java.nio.file.Files.createTempDirectory("graft_minhash_edges").toString
+    SessionArtifacts.parquet(s, "minhashedges", d) {
       val docs = Tables.documents(s, d)
       val cands = lshCandidatesCapped(lshBands(sigsOf(docs), "doc_id", "sig"), "doc_id")
       verifyJaccard(cands, docs, charShingles($"text", 12))
         .where($"jac" >= 0.9).select($"a", $"b")
-        .write.mode("overwrite").parquet(dir)
-      graft.core.SessionArtifacts.resetDir(s, dirKey, dir)
-      s.conf.set(srcKey, d)
     }
-    s.read.parquet(s.conf.get(dirKey))
   }
 
   /** Near-dup CLUSTERS (the actual dedup operation): population-capped
@@ -482,24 +463,14 @@ object Dedup {
     * [[lshCandidatesCapped]]. */
   def minhashClusters(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    // the LABEL artifact is session-materialized like the edge artifact
-    // one level below it (round 13): four consumers (clusters itself,
+    // the LABEL artifact (round 13): four consumers (clusters itself,
     // keep-list, dup-weights, modularity-dedup) each re-ran the CC
     // fixpoint per invocation — at 100 TB the cluster assignment is
-    // published ONCE beside the corpus and every consumer reads it,
-    // exactly the keep-list contract the scaladocs already state. The
-    // incremental twin maintains its own base-star artifact unchanged.
-    val srcKey = "spark.graft.minhashlabels.src"
-    val dirKey = "spark.graft.minhashlabels.dir"
-    if (!s.conf.getOption(srcKey).contains(d)) {
-      val dir = java.nio.file.Files.createTempDirectory("graft_minhash_labels").toString
+    // published ONCE beside the corpus and every consumer reads it
+    SessionArtifacts.parquet(s, "minhashlabels", d) {
       connectedComponents(minhashEdgesShared(s, d))
         .select($"n".as("doc_id"), $"l".as("cluster_rep"))
-        .write.mode("overwrite").parquet(dir)
-      graft.core.SessionArtifacts.resetDir(s, dirKey, dir)
-      s.conf.set(srcKey, d)
     }
-    s.read.parquet(s.conf.get(dirKey))
   }
 
   /** Dedup-aware SAMPLING WEIGHTS — the soft alternative to hard
@@ -555,27 +526,17 @@ object Dedup {
     * "yesterday's" maintained artifact, shared by every ingestion-time
     * consumer ([[incrementalDedup]]'s pair probe and
     * [[minhashClustersIncremental]]'s cluster update). */
-  private def baseBandIndex(s: SparkSession, d: String, docs: DataFrame): DataFrame = {
-    val srcKey = "spark.graft.basebands.src"
-    val dirKey = "spark.graft.basebands.dir"
-    if (!s.conf.getOption(srcKey).contains(d)) {
-      val dir = java.nio.file.Files.createTempDirectory("graft_base_bands").toString
-      lshBands(sigsOf(docs.where(Maintenance.bucketCol < 90)), "doc_id", "sig")
-        .write.mode("overwrite").parquet(dir)
-      graft.core.SessionArtifacts.resetDir(s, dirKey, dir)
-      s.conf.set(srcKey, d)
-    }
-    s.read.parquet(s.conf.get(dirKey))
-  }
+  private def baseBandIndex(s: SparkSession, d: String, docs: DataFrame): DataFrame =
+    SessionArtifacts.parquet(s, "basebands", d)(
+      lshBands(sigsOf(docs.where(Maintenance.bucketCol < 90)), "doc_id", "sig"))
 
   /** Incremental near-dup detection — the INGESTION-TIME dedup shape: new
     * documents (the delta) are probed against the banded signature index
     * of the EXISTING corpus (the base), never re-self-joining the whole
     * corpus. Base/delta membership is the content-addressed hash split
     * ([[Maintenance.bucketCol]] < 90 = base, ≥ 90 = delta — stands in for
-    * yesterday's corpus vs today's batch). The base index is a
-    * session-materialized parquet artifact ([[baseBandIndex]]), same
-    * discipline as the other indexes: at 100 TB the banded index is
+    * yesterday's corpus vs today's batch). The base index is a session
+    * artifact ([[baseBandIndex]]): at 100 TB the banded index is
     * maintained beside the corpus and each ingest batch pays only
     * sig(delta) + an index probe — work ∝ |delta|, not ∝ |corpus|.
     * Verification restricts to candidate docs on BOTH sides
@@ -636,13 +597,10 @@ object Dedup {
   def minhashClustersIncremental(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     val docs = Tables.documents(s, d)
-    val srcKey = "spark.graft.basestars.src"
-    val dirKey = "spark.graft.basestars.dir"
-    if (!s.conf.getOption(srcKey).contains(d)) {
-      val dir = java.nio.file.Files.createTempDirectory("graft_base_stars").toString
-      // yesterday's PUBLISHED labels are the output of the capped label
-      // pipeline on the base corpus (same generator the full-corpus
-      // minhashClusters runs), so base and incremental stay one contract
+    // yesterday's PUBLISHED labels are the output of the capped label
+    // pipeline on the base corpus (same generator the full-corpus
+    // minhashClusters runs), so base and incremental stay one contract
+    val baseStars = SessionArtifacts.parquet(s, "basestars", d) {
       val base = docs.where(Maintenance.bucketCol < 90)
       val baseCands =
         lshCandidatesCapped(lshBands(sigsOf(base), "doc_id", "sig"), "doc_id")
@@ -650,11 +608,7 @@ object Dedup {
         verifyJaccard(baseCands, base, charShingles($"text", 12))
           .where($"jac" >= 0.9).select($"a", $"b"))
         .where($"n" =!= $"l") // roots re-derive from the star edges
-        .write.mode("overwrite").parquet(dir)
-      graft.core.SessionArtifacts.resetDir(s, dirKey, dir)
-      s.conf.set(srcKey, d)
-    }
-    val baseStars = s.read.parquet(s.conf.get(dirKey)) // (n, l), n ≠ l
+    } // (n, l), n ≠ l
     // delta signatures/bands are computed ONCE and feed BOTH probe shapes
     // (cross = index probe, self = delta-delta candidates), and the two
     // candidate sets run through ONE verify join — the naive composition
@@ -1381,40 +1335,27 @@ object Dedup {
     * shingle (the round-1 shape) cannot happen — the self-join touches
     * ~(1-τ)·|d| rare shingles per doc. */
   def ngramJaccard(s: SparkSession, d: String): DataFrame = {
-    import s.implicits._
-    // EXPLICIT WRITTEN INDEX (round-3 hardening): the prefix index is
-    // built once per (session, data dir) and written to parquet; every
-    // subsequent call reads the index instead of re-deriving it. This is
-    // exactly what a 100 TB deployment does — a similarity index is a
-    // materialized artifact maintained beside the corpus, not a per-query
-    // session cache — and it removes the round-2 failure mode where the
-    // driver's memory pressure evicted the persisted shingle corpus and
-    // the query fell off an 8× bench cliff. Same session-scoped staleness
-    // contract as the Sources memos (fixtures are immutable in-session).
-    val tau = 0.8
-    // session-conf memo (same pattern as Sources.bucketedJoin): dies with
-    // the session instead of pinning sessions/frames in a JVM singleton.
-    // Round 4: the CANDIDATE PAIRS are written alongside the index — the
-    // index self-join was still re-running per call (3.6 s of the driver's
-    // bench rep), but candidates are as much a maintained artifact of an
-    // immutable corpus as the index itself. A per-call invocation now
-    // reads the (tiny) pair list and pays only exact verification.
-    val srcKey = "spark.graft.ngramidx.src"
-    val dirKey = "spark.graft.ngramidx.dir"
-    val candKey = "spark.graft.ngramcands.dir"
-    if (!s.conf.getOption(srcKey).contains(d)) {
-      val dir = java.nio.file.Files.createTempDirectory("graft_ngram_idx").toString
-      ngramPrefixIndex(Tables.documents(s, d), tau)
-        .write.mode("overwrite").parquet(dir)
-      val cdir = java.nio.file.Files.createTempDirectory("graft_ngram_cands").toString
-      ngramCandidates(s.read.parquet(dir), tau)
-        .write.mode("overwrite").parquet(cdir)
-      graft.core.SessionArtifacts.resetDir(s, dirKey, dir)
-      graft.core.SessionArtifacts.resetDir(s, candKey, cdir)
-      s.conf.set(srcKey, d)
-    }
-    ngramVerifyHashed(s.read.parquet(s.conf.get(candKey)), Tables.documents(s, d), tau)
+    ngramVerifyHashed(s.read.parquet(ngramCandidatesDir(s, d, NgramTau)),
+      Tables.documents(s, d), NgramTau)
   }
+
+  /** The Jaccard threshold [[ngramJaccard]] runs at. */
+  private[graft] val NgramTau = 0.8
+
+  /** The prefix index (`idx/`) and its candidate pairs (`cands/`) as one
+    * session artifact; returns the candidates' dir. A similarity index
+    * is maintained beside the corpus, not re-derived per query (round 3:
+    * a persisted shingle corpus evicted under memory pressure put the
+    * query off an 8× cliff), and so are its candidates (round 4: the
+    * index self-join was 3.6 s of a bench rep), so a call pays only the
+    * exact verification. */
+  private[graft] def ngramCandidatesDir(s: SparkSession, d: String, tau: Double): String =
+    SessionArtifacts.materialize(s, "ngram", d, tau) { dir =>
+      ngramPrefixIndex(Tables.documents(s, d), tau)
+        .write.mode("overwrite").parquet(s"$dir/idx")
+      ngramCandidates(s.read.parquet(s"$dir/idx"), tau)
+        .write.mode("overwrite").parquet(s"$dir/cands")
+    } + "/cands"
 
   /** Exact-count verification tuned for WIDE candidate sets (the prefix
     * filter at τ=0.8 admits ~10 candidates/doc on the fixture):
@@ -1572,8 +1513,8 @@ object Dedup {
     * pipeline) and recall_ok asserts SimHash-at-hamming≤3 recovered ≥
     * `floor` of them. SimHash with a 3-bit budget on 64 bits is a
     * high-precision NEAR-EXACT duplicate detector — jaccard-0.9 pairs
-    * legitimately differ in more bits — so measured recall (RecallProbe,
-    * round 3) is 0.16 at sf0.01 / 0.19 at sf0.1 and the floor is
+    * legitimately differ in more bits — so measured recall (round 3) is
+    * 0.16 at sf0.01 / 0.19 at sf0.1 and the floor is
     * ratcheted to 0.12 ≈ 0.8× the min measured; the planted
     * identical/near-identical recall (hamming 0) stays in DedupSpec. */
   def simhashRecall(s: SparkSession, d: String, floor: Double = 0.12): DataFrame = {
@@ -1745,8 +1686,8 @@ object Dedup {
     * recall_ok asserts LSH recovered ≥ `floor` of the exact pairs at the
     * same τ. The fixture's pairs are mid-similarity (all cos < 0.6 at
     * sf0.01 — near-uniform vectors), where hyperplane-LSH theory gives
-    * per-pair collision ≈ 1-(1-(1-θ/π)⁸)⁸ ≈ 0.27; measured (RecallProbe,
-    * round 3) 4/14 = 0.29 at sf0.01 and 32/144 = 0.22 at sf0.1, floor
+    * per-pair collision ≈ 1-(1-(1-θ/π)⁸)⁸ ≈ 0.27; measured (round 3)
+    * 4/14 = 0.29 at sf0.01 and 32/144 = 0.22 at sf0.1, floor
     * ratcheted to 0.17 ≈ 0.8× the min measured. A quality regression now
     * hash-fails CORRECTNESS. */
   def embeddingLshRecall(s: SparkSession, d: String,
@@ -1849,30 +1790,16 @@ object Dedup {
   private def semanticExactShared(s: SparkSession, d: String,
       tau: Double): (DataFrame, DataFrame) = {
     import s.implicits._
-    // memo keyed on (dir, tau): a same-session call at a different tau
-    // must rebuild, not silently reuse the 0.45 artifacts (ADVICE r14)
-    val srcKey = "spark.graft.semexact.src"
-    val pairsKey = "spark.graft.semexact.pairs.dir"
-    val keepKey = "spark.graft.semexact.keep.dir"
-    if (!s.conf.getOption(srcKey).contains(s"$d#$tau")) {
-      val pairsDir = java.nio.file.Files.createTempDirectory("graft_sem_pairs").toString
-      val keepDir = java.nio.file.Files.createTempDirectory("graft_sem_keep").toString
+    val dir = SessionArtifacts.materialize(s, "semexact", d, tau) { dir =>
       val pairs = embeddingCosineExact(s, d, tau).select($"vec_a", $"vec_b")
         .localCheckpoint(eager = false) // feeds both the dump and the CC below
-      pairs.write.mode("overwrite").parquet(pairsDir)
+      pairs.write.mode("overwrite").parquet(s"$dir/pairs")
       semanticKeepOf(s, d, pairs, "keep_exact")
-        .write.mode("overwrite").parquet(keepDir)
-      graft.core.SessionArtifacts.resetDir(s, pairsKey, pairsDir)
-      graft.core.SessionArtifacts.resetDir(s, keepKey, keepDir)
-      s.conf.set(srcKey, s"$d#$tau")
+        .write.mode("overwrite").parquet(s"$dir/keep")
     }
-    (s.read.parquet(s.conf.get(pairsKey)), s.read.parquet(s.conf.get(keepKey)))
+    (s.read.parquet(s"$dir/pairs"), s.read.parquet(s"$dir/keep"))
   }
 
-  /** The counts behind [[semanticDedupAnn]]'s flags, factored out so
-    * `graft.tools.SemAnnProbe` can print the raw numerators for floor
-    * ratcheting ("measure, don't guess"):
-    * (n_exact_pairs, n_found_pairs, n_vectors, n_agree). */
   /** Target mean cell population of the semantic-dedup cell index —
     * the quantizer-size rule that keeps [[SemCellCap]] meaningful at
     * scale: C(n) = max([[SimSearch.NumCentroids]], ceil(n / 128)), so
@@ -1885,7 +1812,7 @@ object Dedup {
     * sf1 decade measured WHY this rule exists: at fixed C=32 a 20k
     * corpus puts ~625 vectors in every cell, ALL cells breach the
     * 512 star-cap, and pair recall collapses to 0.001; with C(n)=157
-    * the same probe measures 0.62 (SemAnnProbe, round 15). */
+    * the same probe measures 0.62 (round 15). */
   private[graft] val SemTargetCellPop = 128
 
   /** The semantic-dedup CELL INDEX — [[SimSearch.ivfListsShared]] when
@@ -1898,20 +1825,12 @@ object Dedup {
     val c = math.max(SimSearch.NumCentroids,
       ((e.count() + SemTargetCellPop - 1) / SemTargetCellPop).toInt)
     if (c == SimSearch.NumCentroids) SimSearch.ivfListsShared(s, d)
-    else {
-      val srcKey = "spark.graft.semlists.src"
-      val dirKey = "spark.graft.semlists.dir"
-      if (!s.conf.getOption(srcKey).contains(s"$d#$c")) {
-        val dir = java.nio.file.Files.createTempDirectory("graft_sem_lists").toString
-        SimSearch.ivfListsOf(e, SimSearch.centroidDrawOf(e, c))
-          .write.mode("overwrite").parquet(dir)
-        graft.core.SessionArtifacts.resetDir(s, dirKey, dir)
-        s.conf.set(srcKey, s"$d#$c")
-      }
-      s.read.parquet(s.conf.get(dirKey))
-    }
+    else SessionArtifacts.parquet(s, "semlists", d, c)(
+      SimSearch.ivfListsOf(e, SimSearch.centroidDrawOf(e, c)))
   }
 
+  /** The counts behind [[semanticDedupAnn]]'s flags:
+    * (n_exact_pairs, n_found_pairs, n_vectors, n_agree). */
   private[graft] def semanticAnnCounts(s: SparkSession, d: String,
       tau: Double): DataFrame = {
     import s.implicits._
@@ -1957,8 +1876,8 @@ object Dedup {
     *  - `n_exact_pairs` / `n_vectors` — independently SQL-replayable
     *    anchors (the flags alone would hash-match trivially).
     *
-    * Floors ratcheted from measurement (graft.tools.SemAnnProbe, round
-    * 15: C(n)-scaled cells, top-3 assignment — the third slot lifted
+    * Floors ratcheted from measurement (round 15: C(n)-scaled cells,
+    * top-3 assignment — the third slot lifted
     * the sf0.01 trough 0.29 → 0.57, VERDICT r14 item 3): pair recall
     * 6/7 = 0.86 / 8/14 = 0.57 / 95/144 = 0.66 at sf0.001/0.01/0.1 →
     * pairFloor 0.43 ≈ 0.75× min (mid-similarity pairs on a

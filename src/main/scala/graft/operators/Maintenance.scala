@@ -1,9 +1,8 @@
 package graft.operators
 
-import java.nio.file.Files
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.core.Tables
+import graft.core.{SessionArtifacts, Tables}
 
 /** Pipeline-maintenance operators a training-data platform runs between
   * queries: small-file compaction and stratified sampling (data mixing).
@@ -19,27 +18,13 @@ object Maintenance {
   def compact(s: SparkSession, d: String, targetFiles: Int = 4): DataFrame = {
     import s.implicits._
     // The 64-file fragmented input is FIXTURE STAGING (a real lake is
-    // already fragmented); it is written once per (session, dir) so the
-    // per-call measurement is the operator itself — read small files →
-    // repartition → write target files → read back.
-    val fragKey = "spark.graft.compact.fragdir"
-    val fragSrcKey = "spark.graft.compact.src"
-    if (!s.conf.getOption(fragSrcKey).contains(d)) {
-      val frag = Files.createTempDirectory("graft_frag").toString
-      Tables.documents(s, d).repartition(64)
-        .write.mode(SaveMode.Overwrite).parquet(frag)
-      graft.core.SessionArtifacts.resetDir(s, fragKey, frag)
-      s.conf.set(fragSrcKey, d)
-    }
-    // ONE session-scoped output dir, overwritten per call — a fresh temp
-    // dir per invocation would leak a compacted copy per bench rep
-    val outKey = "spark.graft.compact.outdir"
-    val out = s.conf.getOption(outKey).getOrElse {
-      val o = Files.createTempDirectory("graft_compact").toString
-      s.conf.set(outKey, o); o
-    }
-    s.read.parquet(s.conf.get(fragKey)).repartition(targetFiles)
-      .write.mode(SaveMode.Overwrite).parquet(out)
+    // already fragmented), a session artifact so the per-call measurement
+    // is the operator itself — read small files → repartition → write
+    // target files → read back.
+    val frag = SessionArtifacts.parquet(s, "compact", d)(
+      Tables.documents(s, d).repartition(64))
+    val out = SessionArtifacts.scratch(s, "compact.out")
+    frag.repartition(targetFiles).write.mode(SaveMode.Overwrite).parquet(out)
     s.read.parquet(out).select($"doc_id", $"text")
   }
 
@@ -319,7 +304,7 @@ object Maintenance {
 
   /** Partition backfill/repair — dynamic partition overwrite, the lake
     * op that fixes one corrupted day without touching its neighbors:
-    * the events table is staged day-partitioned once per (session, dir),
+    * the events table is staged day-partitioned as a session artifact,
     * then corrected rows for ONE target day (cents doubled — the stand-in
     * repair) are written with `partitionOverwriteMode=dynamic`, which
     * replaces exactly the partitions present in the write and leaves
@@ -335,15 +320,8 @@ object Maintenance {
     val ev = Tables.events(s, d).select($"event_id", $"user_id",
       round($"value" * 100).cast("bigint").as("cents"),
       date_format(date_trunc("day", $"ts"), "yyyy-MM-dd").as("day"))
-    val srcKey = "spark.graft.backfill.src"
-    val dirKey = "spark.graft.backfill.dir"
-    if (!s.conf.getOption(srcKey).contains(d)) {
-      val dir = Files.createTempDirectory("graft_backfill").toString
-      ev.write.mode(SaveMode.Overwrite).partitionBy("day").parquet(dir)
-      graft.core.SessionArtifacts.resetDir(s, dirKey, dir)
-      s.conf.set(srcKey, d)
-    }
-    val tbl = s.conf.get(dirKey)
+    val tbl = SessionArtifacts.materialize(s, "backfill", d)(
+      ev.write.mode(SaveMode.Overwrite).partitionBy("day").parquet(_))
     val target = ev.select($"day").distinct().orderBy($"day".asc)
       .limit(11).collect().last.getString(0)
     // corrected rows derive from the SOURCE, so re-running the repair is
@@ -649,19 +627,10 @@ object Maintenance {
     java.nio.file.Files.writeString(java.nio.file.Paths.get(s"$dir/_log.json"), log)
   }
 
-  /** Session-memoized commit-log artifact shared by [[timeTravel]] and
+  /** Commit-log session artifact shared by [[timeTravel]] and
     * [[cdfVersions]]; returns the artifact dir. */
-  private def ensureCommitLog(s: SparkSession, d: String): String = {
-    val srcKey = "spark.graft.timetravel.src"
-    val dirKey = "spark.graft.timetravel.dir"
-    if (!s.conf.getOption(srcKey).contains(d)) {
-      val dir = java.nio.file.Files.createTempDirectory("graft_timetravel").toString
-      stageCommitLog(s, d, dir)
-      graft.core.SessionArtifacts.resetDir(s, dirKey, dir)
-      s.conf.set(srcKey, d)
-    }
-    s.conf.get(dirKey)
-  }
+  private def ensureCommitLog(s: SparkSession, d: String): String =
+    SessionArtifacts.materialize(s, "timetravel", d)(stageCommitLog(s, d, _))
 
   /** Parses `_log.json` (bounded — one line per commit) into sorted
     * (version, absolute file path). The log, never a directory listing,
@@ -785,11 +754,8 @@ object Maintenance {
     * O(live files), not O(all history ever written). */
   def vacuum(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    val srcKey = "spark.graft.vacuum.src"
-    val dirKey = "spark.graft.vacuum.dir"
     val horizon = 1L
-    if (!s.conf.getOption(srcKey).contains(d)) {
-      val dir = java.nio.file.Files.createTempDirectory("graft_vacuum").toString
+    val dir = SessionArtifacts.materialize(s, "vacuum", d) { dir =>
       stageCommitLog(s, d, dir)
       val files = readLog(dir)
       // (1) checkpoint: the state as of the horizon, re-tagged version h
@@ -824,10 +790,7 @@ object Maintenance {
           finally walk.close()
         }
       }
-      graft.core.SessionArtifacts.resetDir(s, dirKey, dir)
-      s.conf.set(srcKey, d)
     }
-    val dir = s.conf.get(dirKey)
     val files = readLog(dir)
     (horizon to 2L).map { v =>
       timeTravelAsOf(s, files.filter(_._1 <= v).map(_._2))
@@ -855,10 +818,7 @@ object Maintenance {
     * it names" the oracle-gated contract. */
   def restore(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    val srcKey = "spark.graft.restore.src"
-    val dirKey = "spark.graft.restore.dir"
-    if (!s.conf.getOption(srcKey).contains(d)) {
-      val dir = java.nio.file.Files.createTempDirectory("graft_restore").toString
+    val dir = SessionArtifacts.materialize(s, "restore", d) { dir =>
       stageCommitLog(s, d, dir)
       val files = readLog(dir)
       val tgt = timeTravelAsOf(s, files.filter(_._1 <= 1L).map(_._2))
@@ -888,10 +848,7 @@ object Maintenance {
         s"""{"version": $v, "file": "${path.stripPrefix(s"$dir/")}"}""" } :+
         s"""{"version": 3, "file": "v3"}""").mkString("\n")
       java.nio.file.Files.writeString(java.nio.file.Paths.get(s"$dir/_log.json"), log)
-      graft.core.SessionArtifacts.resetDir(s, dirKey, dir)
-      s.conf.set(srcKey, d)
     }
-    val dir = s.conf.get(dirKey)
     val files = readLog(dir)
     (2L to 3L).map { v =>
       timeTravelAsOf(s, files.filter(_._1 <= v).map(_._2))
@@ -1005,10 +962,7 @@ object Maintenance {
     * rule). */
   def concurrentWriters(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    val srcKey = "spark.graft.occ.src"
-    val dirKey = "spark.graft.occ.dir"
-    if (!s.conf.getOption(srcKey).contains(d)) {
-      val dir = java.nio.file.Files.createTempDirectory("graft_occ").toString
+    val dir = SessionArtifacts.materialize(s, "occ", d) { dir =>
       stageCommitLog(s, d, dir)
       val files = readLog(dir)
       val parent = files.map(_._1).max // 2 — BOTH writers snapshot here
@@ -1092,10 +1046,7 @@ object Maintenance {
       Seq((attempts, conflicts, overlap, rebases))
         .toDF("n_attempts", "n_conflicts", "n_overlap_keys", "n_rebases")
         .write.mode("overwrite").parquet(s"$dir/meta")
-      graft.core.SessionArtifacts.resetDir(s, dirKey, dir)
-      s.conf.set(srcKey, d)
     }
-    val dir = s.conf.get(dirKey)
     val files = readLog(dir)
     val meta = s.read.parquet(s"$dir/meta")
     (2L to 6L).map { v =>

@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.core.Tables
+import graft.core.{SessionArtifacts, Tables}
 import graft.functions.VectorFunctions
 
 /** Approximate-nearest-neighbor / similarity search over the embeddings
@@ -93,25 +93,13 @@ object SimSearch {
     * query, and both recall queries' denominators (which each referenced
     * `bruteTopK` 2–3 times in their plans, so one rep recomputed the full
     * |corpus|×|queries| scoring repeatedly) — reads |queries|·k rows of
-    * (q_id, n_id, rk) from a temp parquet written once per (session, dir,
-    * k). The artifact is what a production vector lake does too: the exact
-    * ground-truth set is computed once and versioned, not re-scored per
-    * evaluation. */
-  def bruteTopKShared(s: SparkSession, d: String, k: Int = 5): DataFrame = {
-    // conf keys are PER K: a single shared slot made the k=20 MMR pool
-    // and the k=5 recall twins evict each other every bench pass, each
-    // eviction re-running the most expensive scan in the family (the
-    // brute all-pairs top-k) — round-13 review finding
-    val srcKey = s"spark.graft.brutetopk.k$k.src"
-    val dirKey = s"spark.graft.brutetopk.k$k.dir"
-    if (!s.conf.getOption(srcKey).contains(s"$d#$k")) {
-      val dir = java.nio.file.Files.createTempDirectory("graft_brute_topk").toString
-      bruteTopK(s, d, k).write.mode("overwrite").parquet(dir)
-      graft.core.SessionArtifacts.resetDir(s, dirKey, dir)
-      s.conf.set(srcKey, s"$d#$k")
-    }
-    s.read.parquet(s.conf.get(dirKey))
-  }
+    * (q_id, n_id, rk) rows of one artifact per k. The artifact is what a
+    * production vector lake does too: the exact ground-truth set is
+    * computed once and versioned, not re-scored per evaluation. */
+  def bruteTopKShared(s: SparkSession, d: String, k: Int = 5): DataFrame =
+    // one slot PER K: a single shared slot made the k=20 MMR pool and the
+    // k=5 recall twins evict each other every bench pass (round 13)
+    SessionArtifacts.parquet(s, s"brutetopk.k$k", d)(bruteTopK(s, d, k))
 
   /** Greedy steps / candidate-pool size for [[mmrTopK]] — both mirrored
     * by the oracle's unrolled CTE chain. */
@@ -277,18 +265,9 @@ object SimSearch {
     * query after, so the per-query cost the ivf keys measure is the
     * PROBE, not an index rebuild (round 13 — previously each of
     * ivf_recall / ivfpq / mmr_ann re-scored corpus×C per invocation). */
-  private[operators] def ivfListsShared(s: SparkSession, d: String): DataFrame = {
-    val srcKey = "spark.graft.ivflists.src"
-    val dirKey = "spark.graft.ivflists.dir"
-    if (!s.conf.getOption(srcKey).contains(d)) {
-      val dir = java.nio.file.Files.createTempDirectory("graft_ivf_lists").toString
-      ivfListsOf(Tables.embeddings(s, d), ivfCentroidsShared(s, d))
-        .write.mode("overwrite").parquet(dir)
-      graft.core.SessionArtifacts.resetDir(s, dirKey, dir)
-      s.conf.set(srcKey, d)
-    }
-    s.read.parquet(s.conf.get(dirKey))
-  }
+  private[operators] def ivfListsShared(s: SparkSession, d: String): DataFrame =
+    SessionArtifacts.parquet(s, "ivflists", d)(
+      ivfListsOf(Tables.embeddings(s, d), ivfCentroidsShared(s, d)))
 
   /** The inverted-lists build over any (corpus, centroids) pair —
     * factored so Dedup's semantic-dedup cell index can reuse it with a
@@ -340,17 +319,8 @@ object SimSearch {
     * publishes the quantizer WITH the index; probes now scan C parquet
     * rows (floats round-trip parquet bit-exact, so assignments and
     * probe rankings are unchanged). */
-  private[operators] def ivfCentroidsShared(s: SparkSession, d: String): DataFrame = {
-    val srcKey = "spark.graft.ivfcents.src"
-    val dirKey = "spark.graft.ivfcents.dir"
-    if (!s.conf.getOption(srcKey).contains(d)) {
-      val dir = java.nio.file.Files.createTempDirectory("graft_ivf_cents").toString
-      ivfCentroids(Tables.embeddings(s, d)).write.mode("overwrite").parquet(dir)
-      graft.core.SessionArtifacts.resetDir(s, dirKey, dir)
-      s.conf.set(srcKey, d)
-    }
-    s.read.parquet(s.conf.get(dirKey))
-  }
+  private[operators] def ivfCentroidsShared(s: SparkSession, d: String): DataFrame =
+    SessionArtifacts.parquet(s, "ivfcents", d)(ivfCentroids(Tables.embeddings(s, d)))
 
   /** IVF candidate generation shared by [[ivfTopK]] and [[mmrAnn]]'s
     * pool: (q_id, q_emb, n_id, embedding) — the inverted-list probe
@@ -551,23 +521,14 @@ object SimSearch {
   /** Session-materialized exact k-NN graph (the [[bruteTopKShared]]
     * artifact pattern): ground truth is computed once and versioned —
     * consumed by the declared query and [[knnGraphLsh]]'s recall gate. */
-  def knnGraphShared(s: SparkSession, d: String, k: Int = KnnGraphK): DataFrame = {
-    // keys are per-k: the k=3 hits/recall artifact and the k=1 wcc
-    // chain graph coexist instead of clobbering one memo slot
-    val srcKey = s"spark.graft.knngraph.src.k$k"
-    val dirKey = s"spark.graft.knngraph.dir.k$k"
-    if (!s.conf.getOption(srcKey).contains(s"$d#$k")) {
-      val dir = java.nio.file.Files.createTempDirectory("graft_knn_graph").toString
-      knnGraph(s, d, k).write.mode("overwrite").parquet(dir)
-      graft.core.SessionArtifacts.resetDir(s, dirKey, dir)
-      s.conf.set(srcKey, s"$d#$k")
-    }
-    s.read.parquet(s.conf.get(dirKey))
-  }
+  def knnGraphShared(s: SparkSession, d: String, k: Int = KnnGraphK): DataFrame =
+    // one slot per k: the k=3 hits/recall artifact and the k=1 wcc chain
+    // graph coexist
+    SessionArtifacts.parquet(s, s"knngraph.k$k", d)(knnGraph(s, d, k))
 
   /** Beam width and hop rounds for [[graphAnnTopK]] — fixed so the
     * search is deterministic and the oracle-facing recall floor has a
-    * fixed parametrization (GraphAnnProbe measures these). */
+    * fixed parametrization. */
   val GraphAnnBeam = 32
   val GraphAnnRounds = 5
 
@@ -606,17 +567,11 @@ object SimSearch {
     * `simsearch_knn_graph` contract keys; per-k memo slots keep both. */
   private[operators] def graphAnnIndexShared(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    val srcKey = "spark.graft.graphann.src"
-    val dirKey = "spark.graft.graphann.dir"
-    if (!s.conf.getOption(srcKey).contains(d)) {
-      val dir = java.nio.file.Files.createTempDirectory("graft_graph_ann").toString
+    s.read.parquet(SessionArtifacts.materialize(s, "graphann", d) { dir =>
       val deg = graphDegree(Tables.embeddings(s, d).count())
       writeNavigable(knnGraphShared(s, d, deg).select($"q_id", $"n_id"),
         Tables.embeddings(s, d), dir)
-      graft.core.SessionArtifacts.resetDir(s, dirKey, dir)
-      s.conf.set(srcKey, d)
-    }
-    s.read.parquet(s.conf.get(dirKey))
+    })
   }
 
   /** GRAPH-ANN BEAM SEARCH over the navigable-graph artifact — the
@@ -793,8 +748,8 @@ object SimSearch {
     * artifact and seeds as the interactive key. Output is the recall
     * contract vs the EXACT k-NN graph (the [[knnGraphShared]] ground
     * truth at k=[[KnnGraphK]]): (n_queries, n_exact, n_found,
-    * recall_ok). Floor ratcheted from measurement (GraphAnnProbe:
-    * batch recall 0.928 / 0.913 / 0.826 at sf0.001/0.01/0.1 — self-node
+    * recall_ok). Floor ratcheted from measurement (batch recall
+    * 0.928 / 0.913 / 0.826 at sf0.001/0.01/0.1 — self-node
     * adjacency anchors each search, so it exceeds the 20-query
     * cold-start recall) → 0.62 ≈ 0.75× the min measured. */
   def graphAnnBatchRecall(s: SparkSession, d: String,
@@ -805,8 +760,7 @@ object SimSearch {
   }
 
   /** The raw counts behind [[graphAnnBatchRecall]] — (n_queries,
-    * n_exact, n_found) — factored out so GraphAnnProbe can print the
-    * measured batch recall for floor ratcheting. */
+    * n_exact, n_found). */
   private[graft] def graphAnnBatchCounts(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     val exact = knnGraphShared(s, d, KnnGraphK).select($"q_id", $"n_id")
@@ -825,8 +779,8 @@ object SimSearch {
 
   /** Global recall floor of graph-ANN beam search vs the exact top-k —
     * the [[lshRecall]] contract. Floor ratcheted from measurement
-    * (graft.tools.GraphAnnProbe, fixed beam-32 / 5-round / C-seed
-    * parametrization, [[graphDegree]]-scaled adjacency — round 15):
+    * (fixed beam-32 / 5-round / C-seed parametrization,
+    * [[graphDegree]]-scaled adjacency — round 15):
     * global recall 1.000 / 1.000 / 1.000 at sf0.001/0.01/0.1 (degrees
     * 6/6/7) and 0.900 at the sf1 decade (n=20k, deg=9) — versus
     * 0.87/0.90/0.60 at the r14 FIXED degree k=3, whose one-decade
@@ -855,30 +809,21 @@ object SimSearch {
     * ADVICE r14). */
   private def graphAnnBaseShared(s: SparkSession, d: String): (DataFrame, DataFrame, Int) = {
     import s.implicits._
-    val srcKey = "spark.graft.graphann.base.src"
-    val adjKey = "spark.graft.graphann.base.adj.dir"
-    val seedKey = "spark.graft.graphann.base.seeds.dir"
-    val degKey = "spark.graft.graphann.base.deg"
-    if (!s.conf.getOption(srcKey).contains(d)) {
-      val adjDir = java.nio.file.Files.createTempDirectory("graft_graph_ann_base").toString
-      val seedDir = java.nio.file.Files.createTempDirectory("graft_graph_ann_seeds").toString
+    val dir = SessionArtifacts.materialize(s, "graphann.base", d) { dir =>
       val baseE = Tables.embeddings(s, d)
         .where(Maintenance.md5Hex32Col($"vec_id") % 100 < 90)
       // degree from the BASE corpus count (the structure being indexed),
-      // memoized beside the artifact — [[graphDegree]] scale-stability
+      // kept beside the graph — [[graphDegree]] scale-stability
       val deg = graphDegree(baseE.count())
-      writeNavigable(knnGraphOf(baseE, deg), baseE, adjDir)
+      writeNavigable(knnGraphOf(baseE, deg), baseE, s"$dir/adj")
       baseE.orderBy(pmod(xxhash64($"vec_id"), lit(1000003L)).asc, $"vec_id".asc)
         .limit(NumCentroids)
         .select($"vec_id".as("n_id"), $"embedding".as("n_emb"))
-        .write.mode("overwrite").parquet(seedDir)
-      graft.core.SessionArtifacts.resetDir(s, adjKey, adjDir)
-      graft.core.SessionArtifacts.resetDir(s, seedKey, seedDir)
-      s.conf.set(degKey, deg.toString)
-      s.conf.set(srcKey, d)
+        .write.mode("overwrite").parquet(s"$dir/seeds")
+      java.nio.file.Files.writeString(java.nio.file.Paths.get(dir, "deg"), deg.toString)
     }
-    (s.read.parquet(s.conf.get(adjKey)), s.read.parquet(s.conf.get(seedKey)),
-      s.conf.get(degKey).toInt)
+    (s.read.parquet(s"$dir/adj"), s.read.parquet(s"$dir/seeds"),
+      java.nio.file.Files.readString(java.nio.file.Paths.get(dir, "deg")).trim.toInt)
   }
 
   /** INCREMENTAL GRAPH-ANN — the maintained-artifact twin every index
@@ -899,8 +844,8 @@ object SimSearch {
     * `edge_recall_ok`, asserting the searched-for neighbor lists retain
     * ≥ floor of the delta's EXACT base top-deg (the audit side is a
     * |delta|-broadcast brute scan — ground truth, not the production
-    * path). Floor ratcheted from measurement (graft.tools.GraphAnnProbe
-    * at the round-15 parametrization — degree-scaled base graph,
+    * path). Floor ratcheted from measurement (the round-15
+    * parametrization — degree-scaled base graph,
     * [[GraphAnnEfConstruction]]=96 insert beam): insert-edge recall
     * 1.000 / 1.000 / 0.969 at sf0.001/0.01/0.1 and 0.710 at the sf1
     * decade (top-9 exact neighbors of a NOT-yet-linked vector is the
@@ -916,12 +861,6 @@ object SimSearch {
         ($"n_found" >= $"n_exact" * floor).cast("long").as("edge_recall_ok"))
   }
 
-  /** The counts behind [[graphAnnIncremental]]'s flag, factored out so
-    * GraphAnnProbe can print the raw insert-edge recall for floor
-    * ratcheting: (n_base, n_delta, n_edges_inserted, n_exact, n_found). */
-  /** The insert searches' result — (q_id = delta node, n_id = base
-    * neighbor, rk): the new nodes' edge lists. Exposed for the spec's
-    * neighbors-are-base-nodes law. */
   /** Insert batch cap: the beam state of one insert wave is
     * ≤ this·[[GraphAnnBeam]] driver triples REGARDLESS of |delta| —
     * HNSW's real insert granularity is the bounded batch, and round 14
@@ -942,6 +881,9 @@ object SimSearch {
     * [[graphAnnIncremental]] for the ratcheted number. */
   val GraphAnnEfConstruction = 3 * GraphAnnBeam
 
+  /** The insert searches' result — (q_id = delta node, n_id = base
+    * neighbor, rk): the new nodes' edge lists. Exposed for the spec's
+    * neighbors-are-base-nodes law. */
   private[operators] def graphAnnInsertedEdges(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     VectorFunctions.register(s)
@@ -963,6 +905,8 @@ object SimSearch {
     }.reduce(_ unionByName _)
   }
 
+  /** The counts behind [[graphAnnIncremental]]'s flag:
+    * (n_base, n_delta, n_edges_inserted, n_exact, n_found). */
   private[graft] def graphAnnInsertCounts(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     VectorFunctions.register(s)
@@ -1015,29 +959,6 @@ object SimSearch {
         ($"n_found" >= $"n_exact" * floor).cast("long").as("recall_ok"))
   }
 
-  /** LSH-bucketed approximate k-NN graph — the scale path for
-    * [[knnGraph]]: candidate pairs are SAME-BUCKET pairs per hash table
-    * (bucket-local quadratic, never corpus-quadratic — at 100 TB the
-    * per-bucket population is what you size via [[Dedup.LshBits]], and
-    * the bucket equi-join shuffles both sides by (table, bucket) with
-    * cardinality that GROWS with the corpus), deduped across tables,
-    * scored exactly with the codegen kernel, per-vector top-k. Recall
-    * < 1 by construction, so the emitted row is the BOUND itself (the
-    * dedup_embedding_lsh contract): (n_vectors, recall_ok) where
-    * recall_ok asserts edge recall vs the exact graph ≥ floor — an
-    * approximation-quality regression fails CORRECTNESS. Floor
-    * ratcheted to ~0.8× measured (graft.tools.RecallProbe round 6,
-    * 8×8-bit tables + hamming-1 multiprobe: edge recall 0.675 / 0.619 /
-    * 0.684 at sf0.001 / 0.01 / 0.1 on the near-uniform fixture — ANN's
-    * hardest case; same-bucket probing alone measured 0.12–0.18, which
-    * is why the multiprobe fan-out is on by default).
-    *
-    * The approximate edge set is [[knnGraphLshEdges]] (exposed for the
-    * RecallProbe measurement and the SimSearchSpec floor law). The
-    * persisted bucket index is returned alongside so callers that
-    * materialize the edges can unpersist it — without that, every direct
-    * call (probes, plan specs) would pin another cached copy for the
-    * session's lifetime. */
   /** Candidate stage of the LSH kNN graph over a [[Dedup.lshBuckets]]
     * index: multiprobe on the PROBE side only ([[lshTopK]] discipline —
     * each vector-as-query probes its own bucket plus the hamming-1
@@ -1059,6 +980,10 @@ object SimSearch {
       .dropDuplicates("q_id", "n_id")
   }
 
+  /** The approximate edge set, with the persisted bucket index it was
+    * scored from, so callers that materialize the edges can unpersist it
+    * — without that, every direct call (plan specs) would pin another
+    * cached copy for the session's lifetime. */
   private[graft] def knnGraphLshEdgesWithIndex(s: SparkSession, d: String,
       k: Int = KnnGraphK): (DataFrame, DataFrame) = {
     import s.implicits._
@@ -1077,28 +1002,33 @@ object SimSearch {
     (edges, b)
   }
 
-  private[graft] def knnGraphLshEdges(s: SparkSession, d: String,
-      k: Int = KnnGraphK): DataFrame = knnGraphLshEdgesWithIndex(s, d, k)._1
-
-  /** Session-materialized LSH edge set (the ngram-candidates precedent:
-    * a similarity index over an immutable corpus is a maintained
-    * artifact, not per-query work — built once per (session, dir, k),
-    * re-read by every later call). The bucket index is unpersisted once
-    * the edges are on disk — the artifact supersedes the cache. */
-  private def knnGraphLshEdgesShared(s: SparkSession, d: String, k: Int): DataFrame = {
-    val srcKey = "spark.graft.knnlsh.src"
-    val dirKey = "spark.graft.knnlsh.dir"
-    if (!s.conf.getOption(srcKey).contains(s"$d#$k")) {
-      val dir = java.nio.file.Files.createTempDirectory("graft_knn_lsh").toString
+  /** The LSH edge set as a session artifact, one slot for (dir, k) (the
+    * ngram-candidates precedent: a similarity index is maintained, not
+    * per-query work). The bucket index is unpersisted once the edges are
+    * on disk — the artifact supersedes the cache. */
+  private def knnGraphLshEdgesShared(s: SparkSession, d: String, k: Int): DataFrame =
+    s.read.parquet(SessionArtifacts.materialize(s, "knnlsh", d, k) { dir =>
       val (edges, bucketIndex) = knnGraphLshEdgesWithIndex(s, d, k)
       try edges.write.mode("overwrite").parquet(dir)
       finally bucketIndex.unpersist()
-      graft.core.SessionArtifacts.resetDir(s, dirKey, dir)
-      s.conf.set(srcKey, s"$d#$k")
-    }
-    s.read.parquet(s.conf.get(dirKey))
-  }
+    })
 
+  /** LSH-bucketed approximate k-NN graph — the scale path for
+    * [[knnGraph]]: candidate pairs are SAME-BUCKET pairs per hash table
+    * (bucket-local quadratic, never corpus-quadratic — at 100 TB the
+    * per-bucket population is what you size via [[Dedup.LshBits]], and
+    * the bucket equi-join shuffles both sides by (table, bucket) with
+    * cardinality that GROWS with the corpus), deduped across tables,
+    * scored exactly with the codegen kernel, per-vector top-k. Recall
+    * < 1 by construction, so the emitted row is the BOUND itself (the
+    * dedup_embedding_lsh contract): (n_vectors, recall_ok) where
+    * recall_ok asserts edge recall vs the exact graph ≥ floor — an
+    * approximation-quality regression fails CORRECTNESS. Floor
+    * ratcheted to ~0.8× measured (round 6, 8×8-bit tables + hamming-1
+    * multiprobe: edge recall 0.675 / 0.619 /
+    * 0.684 at sf0.001 / 0.01 / 0.1 on the near-uniform fixture — ANN's
+    * hardest case; same-bucket probing alone measured 0.12–0.18, which
+    * is why the multiprobe fan-out is on by default). */
   def knnGraphLsh(s: SparkSession, d: String, k: Int = KnnGraphK,
       floor: Double = 0.5): DataFrame = {
     import s.implicits._
@@ -1118,8 +1048,8 @@ object SimSearch {
     * over int8 codes vs the exact float top-k ([[bruteTopKShared]]).
     * Unlike LSH/IVF there is no candidate pruning here — the recall loss
     * is pure rounding error — so the floor is far higher (measured 0.99
-    * at sf0.01 / 1.00 at sf0.1 on the near-uniform fixture,
-    * graft.tools.FlagProbe; floor 0.85 leaves margin for corpora with
+    * at sf0.01 / 1.00 at sf0.1 on the near-uniform fixture; floor 0.85
+    * leaves margin for corpora with
     * tighter neighbor gaps). Output one row (n_queries, recall_ok). */
   def quantizedRecall(s: SparkSession, d: String, k: Int = 5,
       floor: Double = 0.85): DataFrame = {
@@ -1186,18 +1116,9 @@ object SimSearch {
     * 2,560-row broadcast off the 20-row query scan and the 128-row
     * [[pqCodebookShared]] artifact (round 14: previously the per-call
     * table build re-ran the codebook draw's corpus scan). */
-  private def pqCodesShared(s: SparkSession, d: String): DataFrame = {
-    val srcKey = "spark.graft.pqcodes.src"
-    val dirKey = "spark.graft.pqcodes.dir"
-    if (!s.conf.getOption(srcKey).contains(d)) {
-      val dir = java.nio.file.Files.createTempDirectory("graft_pq_codes").toString
-      pqCodesOf(Tables.embeddings(s, d), pqCodebookShared(s, d))
-        .write.mode("overwrite").parquet(dir)
-      graft.core.SessionArtifacts.resetDir(s, dirKey, dir)
-      s.conf.set(srcKey, d)
-    }
-    s.read.parquet(s.conf.get(dirKey))
-  }
+  private def pqCodesShared(s: SparkSession, d: String): DataFrame =
+    SessionArtifacts.parquet(s, "pqcodes", d)(
+      pqCodesOf(Tables.embeddings(s, d), pqCodebookShared(s, d)))
 
   /** Per-row subspace split: (j, 8-float slice) × [[PqSub]] of the
     * `embedding` column — shared by training, encode, and query sides. */
@@ -1234,17 +1155,8 @@ object SimSearch {
     * ADC table build now scans 128 codebook rows plus the 20-row pruned
     * query batch. Floats round-trip parquet bit-exact → identical codes
     * and ADC scores. */
-  private def pqCodebookShared(s: SparkSession, d: String): DataFrame = {
-    val srcKey = "spark.graft.pqcodebook.src"
-    val dirKey = "spark.graft.pqcodebook.dir"
-    if (!s.conf.getOption(srcKey).contains(d)) {
-      val dir = java.nio.file.Files.createTempDirectory("graft_pq_codebook").toString
-      pqCodebookOf(Tables.embeddings(s, d)).write.mode("overwrite").parquet(dir)
-      graft.core.SessionArtifacts.resetDir(s, dirKey, dir)
-      s.conf.set(srcKey, d)
-    }
-    s.read.parquet(s.conf.get(dirKey))
-  }
+  private def pqCodebookShared(s: SparkSession, d: String): DataFrame =
+    SessionArtifacts.parquet(s, "pqcodebook", d)(pqCodebookOf(Tables.embeddings(s, d)))
 
   /** ENCODE against a given codebook: per (vec, j) the nearest centroid,
     * plus its ‖c‖² share of the reconstructed norm —
@@ -1367,7 +1279,7 @@ object SimSearch {
   }
 
   /** PQ recall vs the shared exact top-k, same contract as [[lshRecall]].
-    * Floor ratcheted from measurement (graft.tools.PqProbe): raw ADC
+    * Floor ratcheted from measurement: raw ADC
     * top-k recalls 0.09–0.14 on the near-uniform fixture (16-centroid
     * codebooks on spherical noise — PQ's hardest case); the shortlist +
     * exact re-rank recovers 0.64 / 0.58 / 0.44 at
@@ -1393,7 +1305,7 @@ object SimSearch {
   // approximation-quality regression now fails CORRECTNESS instead of
   // passing silently. The fixture embeddings are near-uniform on the
   // sphere (ANN's hardest case). Floors are ratcheted to ~0.8× measured
-  // (graft.tools.RecallProbe, round 3, fixed 20-query / 32-centroid
+  // (round 3, fixed 20-query / 32-centroid
   // parametrization): multiprobe-LSH global recall 0.64 (sf0.01) / 0.68
   // (sf0.1) → floor 0.5; IVF nprobe=8/32 global recall 0.48 / 0.44 →
   // floor 0.35, with per-query min hits = 1 at both SFs → minHits 1.

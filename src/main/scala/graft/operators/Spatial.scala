@@ -2,7 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.core.Tables
+import graft.core.{SessionArtifacts, Tables}
 
 /** Spatial operators (SURVEY.md §2.3 D/J extension, round 12): the
   * grid-bucketed radius self-join — the geospatial sibling of the banded
@@ -131,19 +131,11 @@ object Spatial {
       .select($"pid", $"lat", $"lon", $"bkt",
         expr(s"(lat + 90000000) div $CellMicroDeg").as("cx"),
         expr(s"(lon + 180000000) div $CellMicroDeg").as("cy"))
-    // maintained base-corpus cell index: built once per (session, dir)
-    val srcKey = "spark.graft.spatialidx.src"
-    val dirKey = "spark.graft.spatialidx.dir"
-    if (!s.conf.getOption(srcKey).contains(d)) {
-      val dir = java.nio.file.Files.createTempDirectory("graft_spatial_idx").toString
+    // maintained base-corpus cell index
+    val baseIdx = SessionArtifacts.parquet(s, "spatialidx", d)(
       pts.where($"bkt" < 90)
         .select($"pid".as("base_id"), $"lat".as("lat_b"), $"lon".as("lon_b"),
-          $"cx", $"cy")
-        .write.mode("overwrite").parquet(dir)
-      graft.core.SessionArtifacts.resetDir(s, dirKey, dir)
-      s.conf.set(srcKey, d)
-    }
-    val baseIdx = s.read.parquet(s.conf.get(dirKey))
+          $"cx", $"cy"))
     val offs = Seq(-1L, 0L, 1L)
     val probe = pts.where($"bkt" >= 90)
       .withColumn("dx", explode(array(offs.map(lit(_)): _*)))
@@ -335,10 +327,7 @@ object Spatial {
       .withColumn("bkt", Maintenance.md5Hex32Col($"pid") % 100)
       .localCheckpoint(eager = false) // base staging + delta probes
     val base = pts.where($"bkt" < 90).select($"pid", $"lat", $"lon")
-    val srcKey = "spark.graft.spatialstars.src"
-    val dirKey = "spark.graft.spatialstars.dir"
-    if (!s.conf.getOption(srcKey).contains(d)) {
-      val dir = java.nio.file.Files.createTempDirectory("graft_spatial_stars").toString
+    val dir = SessionArtifacts.materialize(s, "spatialstars", d) { dir =>
       Dedup.connectedComponents(spatialEdges(base))
         .where($"n" =!= $"l") // roots re-derive from the star edges
         .write.mode("overwrite").parquet(s"$dir/stars")
@@ -346,10 +335,7 @@ object Spatial {
         .select($"pid".as("base_id"), $"lat".as("lat_b"), $"lon".as("lon_b"),
           $"cx", $"cy", $"pop", $"mns")
         .write.mode("overwrite").parquet(s"$dir/idx")
-      graft.core.SessionArtifacts.resetDir(s, dirKey, dir)
-      s.conf.set(srcKey, d)
     }
-    val dir = s.conf.get(dirKey)
     val baseStars = s.read.parquet(s"$dir/stars") // (n, l), n ≠ l
     val idx = s.read.parquet(s"$dir/idx")
     val delta = pts.where($"bkt" >= 90).select($"pid", $"lat", $"lon")

@@ -2,7 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.core.Tables
+import graft.core.{SessionArtifacts, Tables}
 
 /** SQL entry path: the engine's tables registered as temp views and
   * queried with ANSI SQL through `spark.sql` — the query layer the
@@ -17,19 +17,17 @@ object Sql {
 
   /** Register every fixture table as `graft_<name>` temp views. events
     * goes through its dedicated loader (ns-timestamp handling — a bare
-    * parquet read of timestamp[ns] throws). Registration is once per
-    * (session, data dir) — re-registering 10 views (and re-resolving the
-    * events ns-timestamp loader) on every SQL call was measurable
-    * per-query overhead the bench charged to each SQL query. */
-  private val ViewsDirKey = "spark.graft.sql.viewsDir"
-  def registerViews(s: SparkSession, d: String): Unit = {
-    if (s.conf.getOption(ViewsDirKey).contains(d)) return
-    Tables.names.foreach { n =>
-      val df = if (n == "events") Tables.events(s, d) else Tables.load(s, d, n)
-      df.createOrReplaceTempView(s"graft_$n")
+    * parquet read of timestamp[ns] throws). The views are a session
+    * artifact (its dir stays empty) — re-registering 10 views (and
+    * re-resolving the events ns-timestamp loader) on every SQL call was
+    * measurable per-query overhead the bench charged to each SQL query. */
+  def registerViews(s: SparkSession, d: String): Unit =
+    SessionArtifacts.materialize(s, "sql.views", d) { _ =>
+      Tables.names.foreach { n =>
+        val df = if (n == "events") Tables.events(s, d) else Tables.load(s, d, n)
+        df.createOrReplaceTempView(s"graft_$n")
+      }
     }
-    s.conf.set(ViewsDirKey, d)
-  }
 
   /** TPC-H Q3 shape (shipping priority): 3-way join, filter on both fact
     * sides, exact-cents revenue, top-10 by revenue with unique tiebreak. */

@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.core.Tables
+import graft.core.{SessionArtifacts, Tables}
 import graft.mr.WordCount
 
 /** Text-analysis operators for training-data pipelines (SURVEY.md §2.3 J):
@@ -532,16 +532,8 @@ object TextAnalysis {
   def dedupSubstringIncremental(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     val docs = Tables.documents(s, d)
-    val srcKey = "spark.graft.basesubstr.src"
-    val dirKey = "spark.graft.basesubstr.dir"
-    if (!s.conf.getOption(srcKey).contains(d)) {
-      val dir = java.nio.file.Files.createTempDirectory("graft_base_substr").toString
-      substrGramSetOf(docs.where(Maintenance.bucketCol < 90))
-        .write.mode("overwrite").parquet(dir)
-      graft.core.SessionArtifacts.resetDir(s, dirKey, dir)
-      s.conf.set(srcKey, d)
-    }
-    dedupSubstringDeltaOf(s.read.parquet(s.conf.get(dirKey)),
+    dedupSubstringDeltaOf(SessionArtifacts.parquet(s, "basesubstr", d)(
+        substrGramSetOf(docs.where(Maintenance.bucketCol < 90))),
       docs.where(Maintenance.bucketCol >= 90))
   }
 
@@ -619,16 +611,8 @@ object TextAnalysis {
   def dedupSpansIncremental(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     val docs = Tables.documents(s, d)
-    val srcKey = "spark.graft.basegrams.src"
-    val dirKey = "spark.graft.basegrams.dir"
-    if (!s.conf.getOption(srcKey).contains(d)) {
-      val dir = java.nio.file.Files.createTempDirectory("graft_base_grams").toString
-      gramSetOf(docs.where(Maintenance.bucketCol < 90))
-        .write.mode("overwrite").parquet(dir)
-      graft.core.SessionArtifacts.resetDir(s, dirKey, dir)
-      s.conf.set(srcKey, d)
-    }
-    dedupSpansDeltaOf(s.read.parquet(s.conf.get(dirKey)),
+    dedupSpansDeltaOf(SessionArtifacts.parquet(s, "basegrams", d)(
+        gramSetOf(docs.where(Maintenance.bucketCol < 90))),
       docs.where(Maintenance.bucketCol >= 90))
   }
 

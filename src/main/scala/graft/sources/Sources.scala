@@ -1,10 +1,9 @@
 package graft.sources
 
-import java.nio.file.Files
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
-import graft.core.Tables
+import graft.core.{SessionArtifacts, Tables}
 import graft.mr.KVCodec
 
 /** Source/sink coverage (SURVEY.md §2.3 B): csv/json read with explicit
@@ -17,33 +16,12 @@ import graft.mr.KVCodec
   * files; `partitionBy` writes a Hive layout whose partition values become
   * prunable predicates on read (`PartitionFilters` in the scan).
   *
-  * Staged-source memoization contract: several sources stage fixture data
-  * once per (session, data dir), keyed by a `spark.graft.*.src` conf value
-  * holding the data-dir path. The memo key is the PATH, not a content
-  * fingerprint — correct here because the test fixtures are immutable per
-  * directory. A deployment staging from mutable tables must add a content
-  * version to the key (e.g. max ingest timestamp or a snapshot id), or the
-  * memo serves stale stage-outs after an in-place overwrite.
+  * The roundtrip sources re-write per call into a
+  * [[SessionArtifacts.scratch]] dir (the encode path is part of what is
+  * measured); the staged sources write their fixture copy once, as a
+  * session artifact.
   */
 object Sources {
-  private def tmp(prefix: String): String =
-    Files.createTempDirectory(prefix).toString
-
-  /** Fresh per-invocation staging dir, REGISTERED under a per-call-site
-    * `spark.graft.dir.*` conf key: registering deletes the previous
-    * invocation's dir for the same prefix (resetDir), so repeated
-    * invocations — a bench run visits every query 4× — hold at most ONE
-    * live copy per call-site instead of accumulating unreclaimed temp
-    * copies (for the lineitem-slice writers that is gigabytes per run at
-    * larger SF), and `SessionArtifacts.clear` sweeps the last one. Used
-    * by the roundtrip sources that deliberately RE-WRITE per invocation
-    * (the encode path is part of what is measured); the once-per-session
-    * staged sources keep their own memo keys. */
-  private def tmp(s: SparkSession, prefix: String): String = {
-    val dir = tmp(prefix)
-    graft.core.SessionArtifacts.resetDir(s, s"spark.graft.dir.$prefix", dir)
-    dir
-  }
 
   /** Binary-file ingest (`binaryFile` format) — the multimodal raw-bytes
     * on-ramp: a directory of opaque per-record files (images, audio,
@@ -51,8 +29,8 @@ object Sources {
     * content: binary) rows. The fixture stages one `doc_<id>.bin` per
     * document (UTF-8 bytes of its text, written distributedly via
     * foreachPartition — local-mode staging; on a cluster the same code
-    * targets shared storage), memoized per (session, data dir) like the
-    * other staged sources. The query parses the record key back out of
+    * targets shared storage), a session artifact like the other staged
+    * sources. The query parses the record key back out of
     * the file PATH (the layout convention every blob-store ingest relies
     * on) and emits size + sha256 of the raw bytes, so the oracle —
     * which sees only the original table — validates the whole
@@ -63,10 +41,7 @@ object Sources {
     * `mm_*` family's (id, binary) parquet layout — this query is the
     * ingest step that feeds that compaction. */
   def binaryFiles(s: SparkSession, d: String): DataFrame = {
-    val srcKey = "spark.graft.binfiles.src"
-    val dirKey = "spark.graft.binfiles.dir"
-    if (!s.conf.getOption(srcKey).contains(d)) {
-      val dir = tmp("graft_binfiles")
+    val dir = SessionArtifacts.materialize(s, "binfiles", d) { dir =>
       Tables.documents(s, d).select(col("doc_id"), col("text"))
         .foreachPartition { it: Iterator[org.apache.spark.sql.Row] =>
           it.foreach { r =>
@@ -75,10 +50,8 @@ object Sources {
               r.getString(1).getBytes(java.nio.charset.StandardCharsets.UTF_8))
           }
         }
-      graft.core.SessionArtifacts.resetDir(s, dirKey, dir)
-      s.conf.set(srcKey, d)
     }
-    s.read.format("binaryFile").load(s.conf.get(dirKey))
+    s.read.format("binaryFile").load(dir)
       .select(
         regexp_extract(col("path"), "doc_(\\d+)\\.bin$", 1).cast("long").as("doc_id"),
         col("length"),
@@ -87,7 +60,7 @@ object Sources {
 
   /** parquet → csv (header, explicit schema on read) → DataFrame. */
   def csvRoundtrip(s: SparkSession, d: String): DataFrame = {
-    val dir = tmp(s, "graft_csv")
+    val dir = SessionArtifacts.scratch(s, "csv")
     Tables.customer(s, d).write.mode(SaveMode.Overwrite)
       .option("header", "true").csv(dir)
     val schema = StructType(Seq(
@@ -99,7 +72,7 @@ object Sources {
 
   /** parquet → json lines → DataFrame (schema pinned: json is typeless). */
   def jsonRoundtrip(s: SparkSession, d: String): DataFrame = {
-    val dir = tmp(s, "graft_json")
+    val dir = SessionArtifacts.scratch(s, "json")
     Tables.nation(s, d).write.mode(SaveMode.Overwrite).json(dir)
     val schema = StructType(Seq(
       StructField("n_nationkey", IntegerType), StructField("n_name", StringType),
@@ -111,7 +84,7 @@ object Sources {
     * entire data plane: O1/O2/O8 + the KV convention). */
   def textKvRoundtrip(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    val dir = tmp(s, "graft_textkv")
+    val dir = SessionArtifacts.scratch(s, "textkv")
     Tables.orders(s, d)
       .select(concat_ws("\t", $"o_orderkey".cast("string"), $"o_orderstatus").as("value"))
       .write.mode(SaveMode.Overwrite).text(dir)
@@ -123,7 +96,7 @@ object Sources {
   /** Hive-partitioned parquet write + read-back aggregation; the partition
     * column round-trips through directory names. */
   def partitionedWrite(s: SparkSession, d: String): DataFrame =
-    partitionedWriteTo(s, d, tmp(s, "graft_part"))
+    partitionedWriteTo(s, d, SessionArtifacts.scratch(s, "part"))
 
   /** Core over an explicit target URI — any Hadoop-SPI scheme works
     * (`file:`, `graftfs:` in GraftFsSpec, a real object store in
@@ -148,22 +121,11 @@ object Sources {
   def bucketedJoin(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     // bucketed TABLES are written once and queried many times — that is
-    // their entire point — so table creation is per (session, data dir),
-    // not per query call; the benched steady state is the zero-exchange
-    // join itself (round 1 re-wrote both tables on every call and the
-    // bench number was 95% setup).
-    // Staleness contract: the memo key is the data DIR, not its contents —
-    // if files under `d` change within a session the cached tables go
-    // stale until a new session (fixtures are immutable here; a library
-    // deployment should key on a content/mtime fingerprint instead).
-    val key = "spark.graft.bucketed.dir"
-    // the table FILES live in a graft_bucketed temp dir; register it under
-    // its own conf key so SessionArtifacts.clear can delete it (DROP TABLE
-    // on external tables leaves the files, and `key` holds the DATA dir)
-    val tmpKey = "spark.graft.bucketed.tmpdir"
-    if (!s.conf.getOption(key).contains(d)) {
-      val base = tmp("graft_bucketed")
-      graft.core.SessionArtifacts.resetDir(s, tmpKey, base)
+    // their entire point — so they are a session artifact (external
+    // tables over the artifact dir), not per-call work; the benched
+    // steady state is the zero-exchange join itself (round 1 re-wrote
+    // both tables on every call and the bench number was 95% setup)
+    SessionArtifacts.materialize(s, "bucketed", d) { base =>
       s.sql("DROP TABLE IF EXISTS graft_li_bkt")
       s.sql("DROP TABLE IF EXISTS graft_ord_bkt")
       Tables.lineitem(s, d)
@@ -176,7 +138,6 @@ object Sources {
         .write.mode(SaveMode.Overwrite)
         .bucketBy(8, "o_orderkey").sortBy("o_orderkey")
         .option("path", s"$base/ord").saveAsTable("graft_ord_bkt")
-      s.conf.set(key, d)
     }
     s.table("graft_li_bkt")
       .join(s.table("graft_ord_bkt"), $"l_orderkey" === $"o_orderkey")
@@ -197,26 +158,16 @@ object Sources {
     * explicit common type keeps the schema comparison honest. */
   def decimalRoundtrip(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    // The decimal parquet is written once per (session, data dir) — same
-    // memoization as the bucketed tables above, same rationale: the
-    // round-trip encode→decode path is fully exercised on first call, and
-    // repeated calls measure the steady-state decimal scan+agg instead of
-    // re-paying a full corpus write (the driver's round-2 bench billed
-    // that write into every rep: 14.4 s measured vs 0.89 recorded).
-    // Session-scoped staleness caveat as for bucketedJoin below.
-    val srcKey = "spark.graft.decimal.src"
-    val dirKey = "spark.graft.decimal.dir"
-    if (!s.conf.getOption(srcKey).contains(d)) {
-      val dir = tmp("graft_decimal")
+    // The decimal parquet is a session artifact, like the bucketed tables
+    // above: the encode→decode path is exercised on the first call, and
+    // later calls measure the steady-state decimal scan+agg instead of
+    // re-paying a full corpus write (the round-2 bench billed that write
+    // into every rep: 14.4 s measured vs 0.89 recorded).
+    SessionArtifacts.parquet(s, "decimal", d)(
       Tables.lineitem(s, d)
         .select($"l_returnflag",
           $"l_extendedprice".cast("decimal(12,2)").as("price"),
-          $"l_discount".cast("decimal(12,2)").as("disc"))
-        .write.mode(SaveMode.Overwrite).parquet(dir)
-      graft.core.SessionArtifacts.resetDir(s, dirKey, dir)
-      s.conf.set(srcKey, d)
-    }
-    s.read.parquet(s.conf.get(dirKey))
+          $"l_discount".cast("decimal(12,2)").as("disc")))
       .groupBy($"l_returnflag")
       .agg(sum($"price").cast("decimal(18,2)").as("sum_price"),
            min($"price").as("min_price"),
@@ -232,7 +183,7 @@ object Sources {
     * being hash-checked. */
   def orcRoundtrip(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    val dir = tmp(s, "graft_orc")
+    val dir = SessionArtifacts.scratch(s, "orc")
     Tables.supplier(s, d).write.mode(SaveMode.Overwrite).orc(dir)
     s.read.orc(dir)
       .select($"s_suppkey", $"s_name", $"s_nationkey", $"s_acctbal")
@@ -255,7 +206,7 @@ object Sources {
       .select($"l_orderkey", $"l_linenumber", $"l_extendedprice", $"l_returnflag")
     val codecs = Seq("snappy", "zstd", "gzip")
     val frames = codecs.map { c =>
-      val dir = tmp(s, s"graft_codec_$c")
+      val dir = SessionArtifacts.scratch(s, s"codec_$c")
       slice.write.mode(SaveMode.Overwrite).option("compression", c).parquet(dir)
       val size = {
         val l = java.nio.file.Files.list(java.nio.file.Paths.get(dir))
@@ -282,7 +233,7 @@ object Sources {
     * XML is record-delimited and the reader splits on element boundaries,
     * so files stay splittable like the other text formats. */
   def xmlRoundtrip(s: SparkSession, d: String): DataFrame = {
-    val dir = tmp(s, "graft_xml")
+    val dir = SessionArtifacts.scratch(s, "xml")
     Tables.part(s, d).write.mode(SaveMode.Overwrite)
       .option("rowTag", "part").format("xml").save(dir)
     val schema = StructType(Seq(
@@ -305,7 +256,7 @@ object Sources {
     * the same either way.) */
   def schemaEvolution(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    val dir = tmp(s, "graft_evolve")
+    val dir = SessionArtifacts.scratch(s, "evolve")
     val nation = Tables.nation(s, d)
     nation.where($"n_nationkey" < 12).select($"n_nationkey", $"n_name")
       .write.mode(SaveMode.Append).parquet(dir)
@@ -330,7 +281,7 @@ object Sources {
     * gets is a parallelism artifact, not a semantic one. */
   def fileMetadata(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    val dir = tmp(s, "graft_meta")
+    val dir = SessionArtifacts.scratch(s, "meta")
     Tables.orders(s, d).write.mode(SaveMode.Overwrite)
       .partitionBy("o_orderstatus").parquet(dir)
     s.read.parquet(dir)
@@ -366,7 +317,7 @@ object Sources {
     * one scan per mode, no shuffles beyond the final 1-row aggregate. */
   def csvMalformed(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    val dir = tmp(s, "graft_csvbad")
+    val dir = SessionArtifacts.scratch(s, "csvbad")
     Tables.documents(s, d).select(
       concat_ws(",", $"doc_id",
         $"source",
@@ -403,32 +354,25 @@ object Sources {
   /** Partition pruning made visible — the single biggest 100 TB lever:
     * a day-partitioned lake queried for ONE day must read one
     * partition's files, not the table. The fixture stages events
-    * Hive-partitioned by day once per (session, dir); the query
+    * Hive-partitioned by day as a session artifact; the query
     * filters on the PARTITION COLUMN and aggregates exact cents.
     * PlanShapeSpec pins the proof: the scan's `PartitionFilters`
     * carries the day equality (directory-level pruning — no file of
     * any other day is even listed into the scan), and the data-file
     * read set is a single partition. The oracle replays the day's
     * aggregate from the raw table. */
-  /** Day-partitioned copy of events, memoized per (session, data dir) —
-    * shared by [[partitionPrune]] (static pruning) and [[joinDpp]]
+  /** Day-partitioned copy of events, a session artifact — shared by
+    * [[partitionPrune]] (static pruning) and [[joinDpp]]
     * (dynamic pruning), which exercise the two halves of the same
     * 100 TB layout contract. */
   private def dayPartitionedEvents(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    val srcKey = "spark.graft.prune.src"
-    val dirKey = "spark.graft.prune.dir"
-    if (!s.conf.getOption(srcKey).contains(d)) {
-      val dir = tmp("graft_prune")
+    s.read.parquet(SessionArtifacts.materialize(s, "prune", d)(
       Tables.events(s, d)
         .select($"event_id", $"user_id",
           round($"value" * 100).cast("bigint").as("cents"),
           date_format(date_trunc("day", $"ts"), "yyyy-MM-dd").as("day"))
-        .write.mode(SaveMode.Overwrite).partitionBy("day").parquet(dir)
-      graft.core.SessionArtifacts.resetDir(s, dirKey, dir)
-      s.conf.set(srcKey, d)
-    }
-    s.read.parquet(s.conf.get(dirKey))
+        .write.mode(SaveMode.Overwrite).partitionBy("day").parquet(_)))
   }
 
   def partitionPrune(s: SparkSession, d: String): DataFrame = {

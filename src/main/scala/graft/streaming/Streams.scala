@@ -3,7 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
-import graft.core.Tables
+import graft.core.{SessionArtifacts, Tables}
 
 /** Structured-Streaming surface (SURVEY.md §2.3 S) over the events fixture
   * re-played as a file stream in ≥[[Microbatches]] time-ordered
@@ -38,28 +38,27 @@ object Streams {
   val Microbatches = 3
 
   /** Stage the events fixture as [[Microbatches]] TIME-RANGE slices in a
-    * temp dir, oldest slice first with strictly increasing mtimes (the
-    * file-stream source orders files by modification time). Staged once
-    * per (session, data dir); every streaming query then replays the
-    * fixture as ≥3 time-ordered microbatches. Time-ordering means the
+    * session-artifact dir, oldest slice first with strictly increasing
+    * mtimes (the file-stream source orders files by modification time).
+    * Every streaming query replays the fixture as ≥3 time-ordered
+    * microbatches. Time-ordering means the
     * event-time watermark (computed from batch N's max) can never drop
     * batch N+1 rows — batch results stay equal to the batch oracle while
     * state is built, queried, and evicted incrementally for real. */
-  private[graft] def stagedEventsDir(s: SparkSession, d: String): String = {
-    val key = s"spark.graft.stream.staged.${d.hashCode}"
-    s.conf.getOption(key).getOrElse {
-      val dir = java.nio.file.Files.createTempDirectory("graft_events_stream")
+  private[graft] def stagedEventsDir(s: SparkSession, d: String): String =
+    SessionArtifacts.materialize(s, "stream.staged", d) { dirName =>
+      val dir = java.nio.file.Paths.get(dirName)
       // normalize through Tables.events (ns-long / NTZ / UTC parquet all
       // collapse to one timestamp type), then stage ts as epoch-micros
       // BIGINT — the stream schema below re-attaches the timestamp type
-      val raw = graft.core.Tables.events(s, d)
+      val raw = Tables.events(s, d)
         .withColumn("ts", unix_micros(col("ts")))
       val Array(c1, c2) = raw.stat.approxQuantile(
         "ts", Array(1.0 / Microbatches, 2.0 / Microbatches), 0.001)
       val lo = Seq(Long.MinValue, c1.toLong, c2.toLong)
       val hi = Seq(c1.toLong, c2.toLong, Long.MaxValue)
       (0 until Microbatches).foreach { i =>
-        val tmp = java.nio.file.Files.createTempDirectory(s"graft_slice_$i")
+        val tmp = dir.resolve(s"graft_slice_$i")
         raw.where(col("ts") >= lo(i) && col("ts") < hi(i))
           .coalesce(1).write.mode("overwrite").parquet(tmp.toString)
         val listing = java.nio.file.Files.list(tmp)
@@ -72,13 +71,10 @@ object Streams {
         java.nio.file.Files.setLastModifiedTime(dst,
           java.nio.file.attribute.FileTime.fromMillis(1000000000000L + i * 60000L))
         // the staging dir's residue (_SUCCESS, crc files) is dead once the
-        // part file moved out — don't leak a dir per slice
-        graft.core.SessionArtifacts.deleteIfArtifactDir(tmp.toString)
+        // part file moved out
+        SessionArtifacts.deleteIfArtifactDir(tmp.toString)
       }
-      s.conf.set(key, dir.toString)
-      dir.toString
     }
-  }
 
   /** The events table's batch schema, needed to open the same parquet as a
     * file stream (streams cannot infer schema). One file per trigger →
@@ -247,9 +243,8 @@ object Streams {
     }
     require(slices.length >= Microbatches, s"staged dir lost slices: ${slices.length}")
     // private per-invocation root (src grows between runs; the checkpoint
-    // is the contract under test); previous invocation's root reclaimed
-    val root = java.nio.file.Files.createTempDirectory("graft_avnow")
-    graft.core.SessionArtifacts.resetDir(s, "spark.graft.avnow.dir", root.toString)
+    // is the contract under test)
+    val root = java.nio.file.Paths.get(SessionArtifacts.scratch(s, "avnow"))
     val src = java.nio.file.Files.createDirectory(root.resolve("src"))
     val ckpt = root.resolve("ckpt").toString
     def stage(i: Int): Unit = {
@@ -618,7 +613,7 @@ object Streams {
     * stream → sink → storage round-trip. */
   def sinkParquet(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    val out = java.nio.file.Files.createTempDirectory("graft_stream_sink").toString
+    val out = SessionArtifacts.scratch(s, "stream_sink")
     val agg = eventsStream(s, d)
       .withWatermark("ts", "10 minutes")
       .groupBy($"event_type")
@@ -702,15 +697,10 @@ object Streams {
 
   def upsertSink(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    val rootPath = java.nio.file.Files.createTempDirectory("graft_stream_upsert")
-    val root = rootPath.toString
-    // Register the chain root so (a) the previous invocation's snapshot
-    // chain is reclaimed here instead of leaking one full chain per
-    // bench rep, and (b) SessionArtifacts.clear's end-of-session sweep
-    // sees the last one. Deleting the prior chain is safe: its only
-    // consumer is the DataFrame the prior invocation returned, which the
-    // caller has already acted on by the time it re-invokes the query.
-    graft.core.SessionArtifacts.resetDir(s, "spark.graft.upsert.dir", root)
+    // the previous invocation's snapshot chain is reclaimed here; its
+    // only consumer is the DataFrame that invocation returned
+    val root = SessionArtifacts.scratch(s, "upsert")
+    val rootPath = java.nio.file.Paths.get(root)
     val stream = eventsStream(s, d).select($"user_id", $"ts".as("last_ts"),
       $"event_id".as("last_event_id"), $"event_type".as("last_type"),
       $"value".as("last_value"))
@@ -866,8 +856,7 @@ object Streams {
     * conservation (good + dlq = everything). */
   def deadLetter(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    val root = java.nio.file.Files.createTempDirectory("graft_stream_dlq").toString
-    graft.core.SessionArtifacts.resetDir(s, "spark.graft.dlq.dir", root)
+    val root = SessionArtifacts.scratch(s, "dlq")
     val src = eventsStream(s, d)
       .withColumn("raw",
         when($"event_id" % 11 === 0, concat(lit("corrupt:"), $"props"))

@@ -23,7 +23,8 @@ object NgramProfile {
       graft.operators.Dedup.ngramJaccard(spark, sfDir).count()
     }
     t("full (warm rep)") { graft.operators.Dedup.ngramJaccard(spark, sfDir).count() }
-    val cdir = spark.conf.get("spark.graft.ngramcands.dir")
+    val cdir = graft.operators.Dedup.ngramCandidatesDir(spark, sfDir,
+      graft.operators.Dedup.NgramTau)
     val nc = t("read candidates") { spark.read.parquet(cdir).count() }
     println(s"[prof] candidates: $nc")
     val docs = graft.core.Tables.documents(spark, sfDir)

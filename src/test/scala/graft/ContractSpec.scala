@@ -89,4 +89,23 @@ class ContractSpec extends AnyFunSuite {
       s"docstrings cite test suites that do not exist: ${phantom.sorted.mkString(", ")}" +
         "\nwrite the law, fix the name, or add a justified allowlist entry")
   }
+
+  /** Session artifacts go through one registry: a hand-rolled memo (its
+    * own `spark.graft.*` keys and `resetDir`) is how the stale-input and
+    * colliding-key faults crept in. The one literal allowed outside the
+    * registry is the user's word-count scripts setting. */
+  test("only the session-artifact registry names spark.graft.* keys or calls resetDir") {
+    import java.nio.file.{Files, Paths}
+    import scala.jdk.CollectionConverters._
+    val registry = Paths.get("src/main/scala/graft/core/SessionArtifacts.scala")
+    val userSetting = "\"spark.graft.mr.scriptsDir\""
+    val sources = Files.walk(Paths.get("src/main")).iterator().asScala
+      .filter(p => p.toString.endsWith(".scala") && p != registry).toSeq
+    val keys = sources.filter(f =>
+      read(f.toString).replace(userSetting, "").contains("\"spark.graft."))
+    assert(keys.isEmpty, s"spark.graft.* literals outside the registry: ${keys.mkString(", ")}")
+    val resets = sources.filter(f => !f.startsWith("src/main/scala/graft/core") &&
+      read(f.toString).contains("resetDir"))
+    assert(resets.isEmpty, s"resetDir called outside core: ${resets.mkString(", ")}")
+  }
 }

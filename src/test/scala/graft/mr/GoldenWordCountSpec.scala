@@ -53,12 +53,12 @@ class GoldenWordCountSpec extends SparkSpec {
 
   test("script path honors spark.graft.mr.scriptsDir pointed at a copied dir") {
     // The scripts dir must be a real deployment knob, not a baked-in
-    // path: copy mapper.py/reducer.py elsewhere, point the conf at the
-    // copy, and the script-pipe query must match the native path.
+    // path: copy the shipped mapper.py/reducer.py elsewhere, point the
+    // conf at the copy, and the script-pipe query must match the native
+    // path.
     val dir = java.nio.file.Files.createTempDirectory("graft_scripts")
     for (f <- Seq("mapper.py", "reducer.py"))
-      java.nio.file.Files.copy(
-        java.nio.file.Paths.get(Scripts, f), dir.resolve(f))
+      java.nio.file.Files.writeString(dir.resolve(f), WordCount.shippedScript(f))
     spark.conf.set("spark.graft.mr.scriptsDir", dir.toString)
     try {
       val viaCopy = WordCount.mrScript(spark, sf).collect()

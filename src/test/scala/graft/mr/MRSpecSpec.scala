@@ -3,11 +3,16 @@ package graft.mr
 import graft.SparkSpec
 
 /** End-to-end JSON-spec job run (SURVEY.md §3 E1): the reference's own
-  * spec shape + its unmodified mapper.py/reducer.py over a small corpus,
+  * spec shape + the shipped mapper.py/reducer.py over a small corpus,
   * validated with the reference validator's contract — concatenate all
   * part files, sort globally, compare (validate_output.py:10-29). */
 class MRSpecSpec extends SparkSpec {
-  private val Scripts = "/root/reference/client/scripts"
+  private lazy val Scripts = {
+    val dir = java.nio.file.Files.createTempDirectory("mrspec_scripts")
+    for (f <- Seq("mapper.py", "reducer.py"))
+      java.nio.file.Files.writeString(dir.resolve(f), WordCount.shippedScript(f))
+    dir.toString
+  }
 
   test("MRSpec.run executes the reference spec shape end-to-end with R output files") {
     val dir = java.nio.file.Files.createTempDirectory("mrspec_in")

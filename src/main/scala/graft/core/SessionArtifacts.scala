@@ -1,6 +1,10 @@
 package graft.core
 
+import java.util.concurrent.ConcurrentHashMap
+import org.apache.spark.SparkContext
+import org.apache.spark.scheduler.{SparkListener, SparkListenerApplicationEnd}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 
 /** The registry of session artifacts: parquet dirs, bucketed tables and
   * temp views that an operator derives from a data dir once and reuses
@@ -22,8 +26,19 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * build returns; a build that throws has its dir deleted, and the
   * previous registration (if any) is left as it was.
   *
-  * [[clear]] drops everything at once, for a long-lived session that
-  * moves between many corpora.
+  * Resolved relations. [[read]] is the one parquet read of a fixture
+  * table or an artifact dir. Resolving `spark.read.parquet` is itself a
+  * Spark job (footer schema inference), plus a listing job for a dir of
+  * more than 32 subdirs; [[read]] keeps the resolved relation (schema
+  * and file listing) per path and serves later reads from it with no
+  * job. Its key is the path's (path, length, mtime) fingerprint and the
+  * session's parquet schema-inference confs, so a rewritten file or a
+  * flipped conf re-resolves; a relation is served only to the session
+  * that resolved it.
+  *
+  * [[clear]] drops every artifact and held relation at once, for a
+  * long-lived session that moves between many corpora; user settings
+  * under `spark.graft.*` stay.
   */
 object SessionArtifacts {
   /** Conf-key namespace all graft artifacts register under. */
@@ -58,8 +73,59 @@ object SessionArtifacts {
   /** [[materialize]] of one frame written as parquet, read back. */
   def parquet(s: SparkSession, name: String, dataDir: String, params: Any*)(
       frame: => DataFrame): DataFrame =
-    s.read.parquet(materialize(s, name, dataDir, params: _*)(
+    read(s, materialize(s, name, dataDir, params: _*)(
       frame.write.mode("overwrite").parquet(_)))
+
+  /** Confs that change what parquet schema inference returns. */
+  private val InferenceConfs = Seq(
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp")
+
+  /** path → (key, relation resolved under that key); one entry per path. */
+  private val relations = new ConcurrentHashMap[String, (String, HadoopFsRelation)]()
+
+  /** Contexts whose end already evicts their relations (weak keys, and
+    * the values do not point back at them). */
+  private val evicting = java.util.Collections.synchronizedMap(
+    new java.util.WeakHashMap[SparkContext, java.lang.Boolean]())
+
+  /** `s.read.parquet(path)`, resolved once per fingerprint: a hit wraps
+    * the held relation in a fresh `LogicalRelation` (fresh attribute ids,
+    * so a self-join of two reads stays unambiguous) and runs no job. */
+  def read(s: SparkSession, path: String): DataFrame = {
+    val key = (fingerprint(s, path) +: InferenceConfs.map(s.conf.getOption(_).orNull))
+      .mkString("#")
+    Option(relations.get(path)).collect {
+      case (k, rel) if k == key && (rel.sparkSession eq s) => s.baseRelationToDataFrame(rel)
+    }.getOrElse {
+      val df = s.read.parquet(path)
+      df.queryExecution.analyzed match {
+        case LogicalRelation(rel: HadoopFsRelation, _, _, _, _) =>
+          evictOnStop(s.sparkContext)
+          relations.put(path, (key, rel))
+        case _ => ()
+      }
+      df
+    }
+  }
+
+  /** A held relation keeps its session reachable, so the entries of a
+    * context go when it stops. */
+  private def evictOnStop(sc: SparkContext): Unit = evicting.synchronized {
+    if (!evicting.containsKey(sc)) {
+      evicting.put(sc, true)
+      sc.addSparkListener(new SparkListener {
+        override def onApplicationEnd(end: SparkListenerApplicationEnd): Unit =
+          relations.values.removeIf(_._2.sparkSession.sparkContext eq sc)
+      })
+    }
+  }
+
+  /** Drop the held relations of `dir` and every path under it. */
+  private def forgetRelations(dir: String): Unit =
+    relations.keySet.removeIf(p => p == dir || p.startsWith(dir + "/"))
 
   /** A fresh, empty `graft_<name>*` dir for one call's output; it
     * replaces (and deletes) the dir the previous call of `name` made, so
@@ -97,21 +163,26 @@ object SessionArtifacts {
     *  1. unpersist all cached frames (catalog-wide — the library's
     *     persists are all CacheManager entries);
     *  2. drop the bucketed catalog tables and `graft_*` temp views;
-    *  3. delete the artifact dirs referenced from `spark.graft.*` conf
-    *     values (only paths under java.io.tmpdir named `graft_*` — `.src`
-    *     values are left untouched);
-    *  4. unset every `spark.graft.*` conf key so the next call rebuilds.
+    *  3. delete the artifact dirs referenced from the registry's
+    *     `spark.graft.*.dir` values (only paths under java.io.tmpdir
+    *     named `graft_*`);
+    *  4. unset the registry's `.src`/`.dir` keys so the next call
+    *     rebuilds; user settings such as `spark.graft.mr.scriptsDir`
+    *     are kept;
+    *  5. empty the resolved-relation cache.
     */
   def clear(s: SparkSession): Unit = {
     s.catalog.clearCache()
     Seq("graft_li_bkt", "graft_ord_bkt")
       .foreach(t => s.sql(s"DROP TABLE IF EXISTS $t"))
     Tables.names.foreach(n => s.catalog.dropTempView(s"graft_$n"))
-    val graftKeys = s.conf.getAll.keys.filter(_.startsWith(Prefix)).toSeq
-    graftKeys.foreach { k =>
-      s.conf.getOption(k).foreach(deleteIfArtifactDir)
+    val registryKeys = s.conf.getAll.keys
+      .filter(k => k.startsWith(Prefix) && (k.endsWith(".src") || k.endsWith(".dir"))).toSeq
+    registryKeys.foreach { k =>
+      if (k.endsWith(".dir")) s.conf.getOption(k).foreach(deleteIfArtifactDir)
       s.conf.unset(k)
     }
+    relations.clear()
   }
 
   /** Replace an artifact-dir conf value, deleting the dir the old value
@@ -132,6 +203,7 @@ object SessionArtifacts {
     if (!p.startsWith(tmpRoot) || p == tmpRoot) return
     if (!p.getFileName.toString.startsWith(DirPrefix)) return
     if (!Files.isDirectory(p)) return
+    forgetRelations(p.toString)
     try {
       val walk = Files.walk(p)
       try walk.sorted(java.util.Comparator.reverseOrder[Path]())

@@ -1335,7 +1335,7 @@ object Dedup {
     * shingle (the round-1 shape) cannot happen — the self-join touches
     * ~(1-τ)·|d| rare shingles per doc. */
   def ngramJaccard(s: SparkSession, d: String): DataFrame = {
-    ngramVerifyHashed(s.read.parquet(ngramCandidatesDir(s, d, NgramTau)),
+    ngramVerifyHashed(SessionArtifacts.read(s, ngramCandidatesDir(s, d, NgramTau)),
       Tables.documents(s, d), NgramTau)
   }
 
@@ -1797,7 +1797,7 @@ object Dedup {
       semanticKeepOf(s, d, pairs, "keep_exact")
         .write.mode("overwrite").parquet(s"$dir/keep")
     }
-    (s.read.parquet(s"$dir/pairs"), s.read.parquet(s"$dir/keep"))
+    (SessionArtifacts.read(s, s"$dir/pairs"), SessionArtifacts.read(s, s"$dir/keep"))
   }
 
   /** Target mean cell population of the semantic-dedup cell index —

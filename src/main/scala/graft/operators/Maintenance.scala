@@ -1048,7 +1048,7 @@ object Maintenance {
         .write.mode("overwrite").parquet(s"$dir/meta")
     }
     val files = readLog(dir)
-    val meta = s.read.parquet(s"$dir/meta")
+    val meta = SessionArtifacts.read(s, s"$dir/meta")
     (2L to 6L).map { v =>
       timeTravelAsOf(s, files.filter(_._1 <= v).map(_._2))
         .agg(count(lit(1)).as("n_rows"), sum($"cents").as("sum_cents"))

@@ -567,7 +567,7 @@ object SimSearch {
     * `simsearch_knn_graph` contract keys; per-k memo slots keep both. */
   private[operators] def graphAnnIndexShared(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    s.read.parquet(SessionArtifacts.materialize(s, "graphann", d) { dir =>
+    SessionArtifacts.read(s, SessionArtifacts.materialize(s, "graphann", d) { dir =>
       val deg = graphDegree(Tables.embeddings(s, d).count())
       writeNavigable(knnGraphShared(s, d, deg).select($"q_id", $"n_id"),
         Tables.embeddings(s, d), dir)
@@ -822,7 +822,7 @@ object SimSearch {
         .write.mode("overwrite").parquet(s"$dir/seeds")
       java.nio.file.Files.writeString(java.nio.file.Paths.get(dir, "deg"), deg.toString)
     }
-    (s.read.parquet(s"$dir/adj"), s.read.parquet(s"$dir/seeds"),
+    (SessionArtifacts.read(s, s"$dir/adj"), SessionArtifacts.read(s, s"$dir/seeds"),
       java.nio.file.Files.readString(java.nio.file.Paths.get(dir, "deg")).trim.toInt)
   }
 
@@ -1007,7 +1007,7 @@ object SimSearch {
     * per-query work). The bucket index is unpersisted once the edges are
     * on disk — the artifact supersedes the cache. */
   private def knnGraphLshEdgesShared(s: SparkSession, d: String, k: Int): DataFrame =
-    s.read.parquet(SessionArtifacts.materialize(s, "knnlsh", d, k) { dir =>
+    SessionArtifacts.read(s, SessionArtifacts.materialize(s, "knnlsh", d, k) { dir =>
       val (edges, bucketIndex) = knnGraphLshEdgesWithIndex(s, d, k)
       try edges.write.mode("overwrite").parquet(dir)
       finally bucketIndex.unpersist()

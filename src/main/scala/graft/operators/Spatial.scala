@@ -336,8 +336,8 @@ object Spatial {
           $"cx", $"cy", $"pop", $"mns")
         .write.mode("overwrite").parquet(s"$dir/idx")
     }
-    val baseStars = s.read.parquet(s"$dir/stars") // (n, l), n ≠ l
-    val idx = s.read.parquet(s"$dir/idx")
+    val baseStars = SessionArtifacts.read(s, s"$dir/stars") // (n, l), n ≠ l
+    val idx = SessionArtifacts.read(s, s"$dir/idx")
     val delta = pts.where($"bkt" >= 90).select($"pid", $"lat", $"lon")
     val newEdges = crossProbeEdges(delta, idx, cap).union(spatialEdges(delta, cap))
       .localCheckpoint(eager = false) // frontier detection + CC input

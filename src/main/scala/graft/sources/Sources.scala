@@ -367,7 +367,7 @@ object Sources {
     * 100 TB layout contract. */
   private def dayPartitionedEvents(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    s.read.parquet(SessionArtifacts.materialize(s, "prune", d)(
+    SessionArtifacts.read(s, SessionArtifacts.materialize(s, "prune", d)(
       Tables.events(s, d)
         .select($"event_id", $"user_id",
           round($"value" * 100).cast("bigint").as("cents"),

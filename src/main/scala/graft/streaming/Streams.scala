@@ -281,7 +281,7 @@ object Streams {
     require(firstRead > 0, "first AvailableNow run must ingest the staged history")
     stage(Microbatches - 1) // new data lands between the runs
     val (caught, secondRead) = runOnce("r2")
-    val deltaRows = s.read.parquet(slices(Microbatches - 1)).count()
+    val deltaRows = SessionArtifacts.read(s, slices(Microbatches - 1)).count()
     // the catch-up contract: run 2's input is EXACTLY the appended delta —
     // a reprocess of run 1's history here means the checkpoint restore
     // failed and the nightly cost model is broken

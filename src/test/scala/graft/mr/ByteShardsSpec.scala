@@ -10,8 +10,7 @@ import org.scalatest.prop.TableDrivenPropertyChecks._
   * and boundary-exact lines. */
 class ByteShardsSpec extends SparkSpec {
 
-  private val fixture =
-    "/root/reference/txt/William Wordsworth___The Prose Works of William Wordsworth.txt"
+  private lazy val fixture = TestCorpus.write(seed = 23, files = 1, bytes = 100000).head
 
   test("packing: covers every byte exactly once, ascending file order, <= M shards") {
     val files = Seq(("c", 100L), ("a", 7L), ("b", 4000L), ("d", 0L))
@@ -41,8 +40,12 @@ class ByteShardsSpec extends SparkSpec {
     }
   }
 
-  test("line parity with textFile for arbitrary M on the reference corpus") {
+  test("line parity with textFile for arbitrary M on a seeded multi-byte corpus") {
     val expected = spark.read.textFile(fixture).collect().toSeq.sorted
+    val size = new java.io.File(fixture).length
+    assert(Seq(7, 20).forall(m => TestCorpus.straddledBoundaries(fixture, m).nonEmpty),
+      "premise: shard boundaries split multi-byte characters")
+    assert(TestCorpus.longestLine(fixture) > (size + 6) / 7, "premise: a line spans a shard")
     forAll(Table("m", 1, 3, 7, 20)) { m =>
       val ds = ByteShards.lines(spark, Seq(fixture), m)
       assert(ds.rdd.getNumPartitions ===
@@ -139,8 +142,8 @@ class ByteShardsSpec extends SparkSpec {
       inputFilesDir = fixture,
       outputFilesDir = out.toString,
       numMapTasks = 6, numReduceTasks = 3,
-      mapperFunc = "/root/reference/client/scripts/mapper.py",
-      reducerFunc = "/root/reference/client/scripts/reducer.py")
+      mapperFunc = s"${TestCorpus.scripts}/mapper.py",
+      reducerFunc = s"${TestCorpus.scripts}/reducer.py")
     val shards = ByteShards.shardFiles(
       Seq((fixture, new java.io.File(fixture).length)), spec.numMapTasks)
     assert(shards.size === 6)

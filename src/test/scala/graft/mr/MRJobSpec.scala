@@ -5,12 +5,10 @@ import graft.SparkSpec
 /** MR-core parity tests (SURVEY.md §5.2): native vs external-script paths
   * produce identical merged results, results are partition-count
   * invariant (the property the reference's FNV-vs-Murmur3 difference makes
-  * essential), and the actual reference mapper/reducer scripts run
-  * unmodified through the pipe path. */
+  * essential), and the shipped mapper/reducer scripts run unmodified
+  * through the pipe path, over a seeded [[TestCorpus]] file. */
 class MRJobSpec extends SparkSpec {
-  private val RefScripts = "/root/reference/client/scripts"
-  private val RefText =
-    "/root/reference/txt/William Wordsworth___The Prose Works of William Wordsworth.txt"
+  private lazy val RefText = TestCorpus.write(seed = 17, files = 1, bytes = 100000).head
 
   private def nativeWordCount(r: Int): Map[String, Long] = {
     val pattern = WordCount.TokenPattern // local: closure must not capture the suite
@@ -23,12 +21,12 @@ class MRJobSpec extends SparkSpec {
 
   lazy val native5: Map[String, Long] = nativeWordCount(5)
 
-  test("reference mapper.py + reducer.py run unmodified through the pipe path") {
+  test("shipped mapper.py + reducer.py run unmodified through the pipe path") {
     val lines = MRJob.text(spark, RefText)
     val scripted = MRJob
-      .mapScript(lines, Seq("python3", s"$RefScripts/mapper.py"))
+      .mapScript(lines, Seq("python3", s"${TestCorpus.scripts}/mapper.py"))
       .partitionSort(5)
-      .reduceScript(Seq("python3", s"$RefScripts/reducer.py"))
+      .reduceScript(Seq("python3", s"${TestCorpus.scripts}/reducer.py"))
       .rdd.collect().map { case (k, v) => k -> v.toLong }.toMap
     assert(scripted.nonEmpty)
     assert(scripted == native5)

@@ -7,13 +7,6 @@ import graft.SparkSpec
   * validated with the reference validator's contract — concatenate all
   * part files, sort globally, compare (validate_output.py:10-29). */
 class MRSpecSpec extends SparkSpec {
-  private lazy val Scripts = {
-    val dir = java.nio.file.Files.createTempDirectory("mrspec_scripts")
-    for (f <- Seq("mapper.py", "reducer.py"))
-      java.nio.file.Files.writeString(dir.resolve(f), WordCount.shippedScript(f))
-    dir.toString
-  }
-
   test("MRSpec.run executes the reference spec shape end-to-end with R output files") {
     val dir = java.nio.file.Files.createTempDirectory("mrspec_in")
     java.nio.file.Files.write(dir.resolve("a.txt"),
@@ -26,7 +19,8 @@ class MRSpecSpec extends SparkSpec {
       "UserID": "t", "JobID": 7,
       "InputFilesDir": "$dir", "OutputFilesDir": "$out",
       "NumMapTasks": 3, "NumReduceTasks": 2,
-      "MapperFunc": "$Scripts/mapper.py", "ReducerFunc": "$Scripts/reducer.py",
+      "MapperFunc": "${TestCorpus.scripts}/mapper.py",
+      "ReducerFunc": "${TestCorpus.scripts}/reducer.py",
       "Url": "http://ignored/mapreduce", "ContainerName": "ignored"
     }""")
     assert(spec.numReduceTasks === 2)

@@ -3,34 +3,9 @@ package graft.operators
 import graft.SparkSpec
 
 /** Job cost of the two driver loops: one connected-components round and
-  * one graph-ANN hop are exactly one Spark job each. Jobs are counted by
-  * job id between two marker jobs (ids are assigned in submission order
-  * across the whole application, so broadcast and AQE stage jobs that
-  * run under their own job group count too); each marker is found
-  * through `setJobGroup` + `statusTracker.getJobIdsForGroup`. */
+  * one graph-ANN hop are exactly one Spark job each (jobs counted by
+  * [[graft.SparkSpec.jobsOf]]). */
 class RoundJobsSpec extends SparkSpec {
-
-  private def markerJob(): Int = {
-    val sc = spark.sparkContext
-    val group = s"round-jobs-marker-${java.util.UUID.randomUUID()}"
-    sc.setJobGroup(group, "job-count marker")
-    try sc.parallelize(Seq(1), 1).count()
-    finally sc.clearJobGroup()
-    val deadline = System.nanoTime() + 30L * 1000000000L
-    var ids = sc.statusTracker.getJobIdsForGroup(group)
-    while (ids.isEmpty && System.nanoTime() < deadline) {
-      Thread.sleep(10)
-      ids = sc.statusTracker.getJobIdsForGroup(group)
-    }
-    assert(ids.length == 1, s"marker job of $group not seen")
-    ids.head
-  }
-
-  private def jobsOf(body: => Unit): Int = {
-    val before = markerJob()
-    body
-    markerJob() - before - 1
-  }
 
   /** The star rounds of [[Dedup.connectedComponents]] replayed on the
     * driver from its entry edge set: the rounds it runs, the last one

@@ -2,15 +2,20 @@ package graft.operators
 
 import java.nio.file.{Files, Path, Paths}
 import scala.jdk.CollectionConverters._
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{TimestampNTZType, TimestampType}
 import graft.SparkSpec
 import graft.core.{SessionArtifacts, Tables}
 import graft.streaming.Streams
 
 /** The session-artifact registry: an artifact is rebuilt when the files
   * of its data dir change, a failed build leaves nothing behind, two data
-  * dirs never share an artifact, and [[SessionArtifacts.clear]] drops
-  * every key and dir so the next query transparently rebuilds. */
+  * dirs never share an artifact, [[SessionArtifacts.clear]] drops every
+  * registry key and dir so the next query transparently rebuilds, and
+  * [[SessionArtifacts.read]] resolves a relation once per fingerprint,
+  * conf set and session. */
 class SessionArtifactsSpec extends SparkSpec {
   private def copyDir(from: String, to: Path): Unit =
     Files.list(Paths.get(from)).iterator().asScala.foreach(f =>
@@ -107,5 +112,80 @@ class SessionArtifactsSpec extends SparkSpec {
     SessionArtifacts.clear(spark)
     assert(java.nio.file.Files.exists(probe), "non-graft_ dir must survive")
     java.nio.file.Files.delete(probe)
+  }
+
+  test("clear drops the registry's keys and keeps the scriptsDir user setting") {
+    val scripts = "spark.graft.mr.scriptsDir"
+    spark.conf.set(scripts, "scripts/wordcount")
+    try {
+      val dir = SessionArtifacts.materialize(spark, "clear_probe", sf)(_ => ())
+      val keys = Seq("src", "dir").map(k => s"${SessionArtifacts.Prefix}clear_probe.$k")
+      assert(keys.forall(spark.conf.getOption(_).isDefined))
+      SessionArtifacts.clear(spark)
+      assert(keys.forall(spark.conf.getOption(_).isEmpty), "the artifact's keys must be unset")
+      assert(!Files.exists(Paths.get(dir)), "the artifact's dir must be deleted")
+      assert(spark.conf.getOption(scripts).contains("scripts/wordcount"),
+        "a user setting under spark.graft.* must survive clear")
+    } finally spark.conf.unset(scripts)
+  }
+
+  test("a warm read of a table or an artifact dir runs no Spark job") {
+    Tables.documents(spark, sf)
+    SimSearch.graphAnnIndexShared(spark, sf)
+    val warm = (jobsOf(Tables.documents(spark, sf)),
+      jobsOf(SimSearch.graphAnnIndexShared(spark, sf)))
+    assert(warm == ((0, 0)), "(documents, graph-ANN index) jobs")
+  }
+
+  test("a rewritten table file is re-resolved without clear") {
+    val d = Files.createTempDirectory("relation_rewrite")
+    try {
+      copyDir(sf, d)
+      val docs = Tables.documents(spark, d.toString)
+      val rows = docs.collect().toSeq
+      assert(Tables.documents(spark, d.toString).count() == rows.size)
+      val extra = docs.where(col("doc_id") === rows.map(_.getLong(0)).min)
+        .withColumn("doc_id", lit(rows.map(_.getLong(0)).max + 1)).collect()
+      Files.delete(d.resolve("documents.parquet"))
+      spark.createDataFrame((rows ++ extra).asJava, docs.schema)
+        .coalesce(1).write.parquet(d.resolve("documents.parquet").toString)
+      assert(Tables.documents(spark, d.toString).count() == rows.size + 1)
+    } finally deleteTree(d)
+  }
+
+  test("two reads of one table self-join unambiguously") {
+    import spark.implicits._
+    val ids = Tables.documents(spark, sf).select("doc_id").as[Long].collect()
+    val pairs = ids.length.toLong * (ids.length - 1) / 2
+    assert(ids.distinct.length == ids.length, "premise: doc_id is a key")
+    val joined = Tables.documents(spark, sf).as("x")
+      .join(Tables.documents(spark, sf).as("y"), $"x.doc_id" < $"y.doc_id")
+    assert(joined.count() == pairs)
+  }
+
+  test("a relation is served only to the session that resolved it") {
+    val other = spark.newSession()
+    def sessionOf(df: DataFrame): SparkSession = df.queryExecution.analyzed.collectFirst {
+      case l: LogicalRelation => l.relation.asInstanceOf[HadoopFsRelation].sparkSession
+    }.get
+    val n = Tables.documents(spark, sf).count()
+    Seq(spark, other, spark, other).foreach { s =>
+      val docs = Tables.documents(s, sf)
+      assert((docs.sparkSession eq s) && (sessionOf(docs) eq s))
+      assert(docs.count() == n)
+    }
+  }
+
+  test("a schema-inference conf is part of the relation's key") {
+    val ntz = "spark.sql.parquet.inferTimestampNTZ.enabled"
+    val path = s"$sf/events.parquet"
+    val prev = spark.conf.get(ntz)
+    def tsType = SessionArtifacts.read(spark, path).schema("ts").dataType
+    try {
+      spark.conf.set(ntz, "true")
+      assert(tsType == TimestampNTZType, "premise: ts is a timestamp without zone")
+      spark.conf.set(ntz, "false")
+      assert(tsType == TimestampType)
+    } finally spark.conf.set(ntz, prev)
   }
 }

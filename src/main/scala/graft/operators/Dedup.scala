@@ -260,8 +260,17 @@ object Dedup {
     * (distinct) shingle arrays — the round-1 explode-and-join counter
     * re-shuffled |pairs|·|shingles/doc| rows and dominated the whole
     * MinHash pipeline (measured 6.9 of 11 s at sf0.1 for 255 pairs).
-    * Integer counts → double division: engine-exact. */
-  def verifyJaccard(pairs: DataFrame, docsRaw: DataFrame, shingles: Column): DataFrame = {
+    * Integer counts → double division: engine-exact.
+    *
+    * `pairs` is read three times (the candidate-doc semi-join and both
+    * verify joins), so it is `localCheckpoint`ed at entry and its plan —
+    * a band self-join, an index probe or a prefix-index join, per caller
+    * — runs once per call instead of once per read. With AQE on,
+    * `localCheckpoint(eager = false)` runs every shuffle and broadcast
+    * stage of `pairs` at this call; only its final stage is deferred to
+    * the first action, which caches its blocks for the other two reads. */
+  def verifyJaccard(pairsIn: DataFrame, docsRaw: DataFrame, shingles: Column): DataFrame = {
+    val pairs = pairsIn.localCheckpoint(eager = false)
     val docsInPairs = pairs.select(col("a").as("doc_id"))
       .union(pairs.select(col("b").as("doc_id"))).distinct()
     val restricted = docsRaw.join(docsInPairs, "doc_id")
@@ -1419,7 +1428,7 @@ object Dedup {
     * and intersects with one codegen'd array_intersect per pair. */
   /** Candidate pairs from the prefix index self-join (exposed separately
     * so PlanShapeSpec can assert the join shape of THIS frame — the
-    * eager checkpoint in [[ngramVerifiedPairs]] would otherwise hide the
+    * checkpoint at [[verifyJaccard]]'s entry would otherwise hide the
     * candidate join from the verified query's executed plan).
     *
     * Three lossless filters compose (losslessness property-tested against
@@ -1450,12 +1459,7 @@ object Dedup {
       tau: Double): DataFrame = {
     val s = prefixIdx.sparkSession
     import s.implicits._
-    // localCheckpoint the (tiny) candidate-pair set: verifyJaccard scans
-    // `pairs` three times (candidate-doc semi-join + both verify joins),
-    // which would re-run the index self-join per scan; checkpointing also
-    // keeps plan lineage flat. Eager + small ⇒ no cache-registry growth.
-    val cands = ngramCandidates(prefixIdx, tau).localCheckpoint(eager = false)
-    verifyJaccard(cands, docsRaw, wordShingles($"text", 3))
+    verifyJaccard(ngramCandidates(prefixIdx, tau), docsRaw, wordShingles($"text", 3))
       .where($"jac" >= tau)
       .select($"a".as("doc_a"), $"b".as("doc_b"), $"jac")
   }
@@ -1464,11 +1468,12 @@ object Dedup {
     * losslessness vs the exhaustive all-pairs join is property-tested in
     * DedupSpec on random near-dup corpora. The prefix index is persisted
     * only for the duration of the candidate materialization (both sides
-    * of the candidate self-join read it); because [[ngramVerifiedPairs]]
-    * EAGERLY checkpoints the candidate set, nothing in the returned
-    * frame's lineage references the index, so the cache is released
-    * before returning — no per-invocation cache-registry growth in
-    * long-lived sessions. */
+    * of the candidate self-join read it). [[verifyJaccard]] checkpoints
+    * the candidate set at entry, which under AQE runs the self-join and
+    * the distinct's shuffle stages at the call and defers only the
+    * post-shuffle distinct; nothing in the returned frame's plan reads
+    * the index, so the cache is released before returning — no
+    * per-invocation cache-registry growth in long-lived sessions. */
   def ngramJaccardPairs(docsIn: DataFrame, tau: Double): DataFrame = {
     val prefixIdx = ngramPrefixIndex(docsIn, tau)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
@@ -1528,16 +1533,49 @@ object Dedup {
   /** Shared recall-bound core (used by every single-row recall query in
     * Dedup and SimSearch, so the bound's semantics — left-semi hit
     * counting, empty-exact behavior — live in exactly one place): one
-    * row (n_exact, n_found) counting `exact` rows and the subset of them
-    * present in `approx` under `keys`. n_exact = 0 ⇒ n_found = 0 and any
-    * `n_found >= n_exact * floor` flag is vacuously true, matching an
-    * oracle that counts zero qualifying rows. */
+    * row (n_exact, n_found) where n_exact counts `exact` rows and n_found
+    * counts the `exact` rows with at least one `approx` row equal under
+    * `keys` (left-semi semantics: duplicate keys on either side count as
+    * they would there, and a null key never matches). n_exact = 0 ⇒
+    * n_found = 0 and any `n_found >= n_exact * floor` flag is vacuously
+    * true, matching an oracle that counts zero qualifying rows.
+    *
+    * One pass over each input: `exact` and `approx` are unioned and
+    * grouped by `keys` once ([[recallGroups]]), then one global
+    * aggregate sums the groups. */
   private[graft] def recallCounts(exact: DataFrame, approx: DataFrame,
+      keys: Seq[String]): DataFrame =
+    recallGroups(exact, approx, keys).agg(nExact, nFound)
+
+  /** The top-k recall bound of the approximate-search keys: one row
+    * (n_queries, recall_ok), n_queries = count(DISTINCT q_id) over
+    * `exact` and recall_ok = n_found ≥ n_exact·floor over (q_id, n_id)
+    * ([[recallCounts]]'s semantics), in the same single aggregate. The
+    * distinct query ids are collected as a set: `exact` is a top-k of a
+    * bounded query batch, and a count(DISTINCT) would add an exchange. */
+  private[graft] def topKRecall(exact: DataFrame, approx: DataFrame,
+      floor: Double): DataFrame =
+    recallGroups(exact, approx, Seq("q_id", "n_id"))
+      .agg(size(collect_set(when(col("ne") > 0, col("q_id")))).cast("long").as("n_queries"),
+        nExact, nFound)
+      .select(col("n_queries"),
+        (col("n_found") >= col("n_exact") * floor).cast("long").as("recall_ok"))
+
+  /** One row per distinct `keys` value of `exact` ∪ `approx` (other
+    * columns are dropped): ne = the `exact` rows holding it, hit = some
+    * non-null-keyed `approx` row holds it. */
+  private def recallGroups(exact: DataFrame, approx: DataFrame,
       keys: Seq[String]): DataFrame = {
-    val found = exact.join(approx, keys, "left_semi")
-    exact.agg(count(lit(1)).as("n_exact"))
-      .crossJoin(found.agg(count(lit(1)).as("n_found")))
+    val k = keys.map(col)
+    exact.select(k :+ lit(1L).as("ne") :+ lit(false).as("hit"): _*)
+      .unionByName(approx.where(k.map(_.isNotNull).reduce(_ && _))
+        .select(k :+ lit(0L).as("ne") :+ lit(true).as("hit"): _*))
+      .groupBy(k: _*).agg(sum(col("ne")).as("ne"), max(col("hit")).as("hit"))
   }
+
+  private def nExact: Column = coalesce(sum(col("ne")), lit(0L)).as("n_exact")
+  private def nFound: Column =
+    coalesce(sum(when(col("hit"), col("ne"))), lit(0L)).as("n_found")
 
   /** Core SimHash candidate+verify pipeline over any (doc_id, text) frame. */
   def simhashPairs(docsIn: DataFrame, maxHamming: Int): DataFrame = {

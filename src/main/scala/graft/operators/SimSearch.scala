@@ -949,15 +949,8 @@ object SimSearch {
   }
 
   def graphAnnRecall(s: SparkSession, d: String, k: Int = 5,
-      floor: Double = 0.75): DataFrame = {
-    import s.implicits._
-    val exact = bruteTopKShared(s, d, k)
-    exact.agg(count_distinct($"q_id").as("n_queries"))
-      .crossJoin(Dedup.recallCounts(exact.select($"q_id", $"n_id"),
-        graphAnnTopK(s, d, k).select($"q_id", $"n_id"), Seq("q_id", "n_id")))
-      .select($"n_queries",
-        ($"n_found" >= $"n_exact" * floor).cast("long").as("recall_ok"))
-  }
+      floor: Double = 0.75): DataFrame =
+    Dedup.topKRecall(bruteTopKShared(s, d, k), graphAnnTopK(s, d, k), floor)
 
   /** Candidate stage of the LSH kNN graph over a [[Dedup.lshBuckets]]
     * index: multiprobe on the PROBE side only ([[lshTopK]] discipline —
@@ -1052,15 +1045,8 @@ object SimSearch {
     * leaves margin for corpora with
     * tighter neighbor gaps). Output one row (n_queries, recall_ok). */
   def quantizedRecall(s: SparkSession, d: String, k: Int = 5,
-      floor: Double = 0.85): DataFrame = {
-    import s.implicits._
-    val exact = bruteTopKShared(s, d, k)
-    exact.agg(count_distinct($"q_id").as("n_queries"))
-      .crossJoin(Dedup.recallCounts(exact.select($"q_id", $"n_id"),
-        quantizedTopK(s, d, k).select($"q_id", $"n_id"), Seq("q_id", "n_id")))
-      .select($"n_queries",
-        ($"n_found" >= $"n_exact" * floor).cast("long").as("recall_ok"))
-  }
+      floor: Double = 0.85): DataFrame =
+    Dedup.topKRecall(bruteTopKShared(s, d, k), quantizedTopK(s, d, k), floor)
 
   /** PQ geometry: 64 dims → [[PqSub]] subvectors × [[PqCent]]-entry
     * per-subspace codebooks = one byte per subvector, an 8-byte code per
@@ -1262,15 +1248,8 @@ object SimSearch {
     * on the near-uniform fixture the intersection lands at ~0.3–0.45)
     * → floor 0.22 ≈ 0.75× worst measured. */
   def ivfPqRecall(s: SparkSession, d: String, k: Int = 5,
-      floor: Double = 0.22): DataFrame = {
-    import s.implicits._
-    val exact = bruteTopKShared(s, d, k)
-    exact.agg(count_distinct($"q_id").as("n_queries"))
-      .crossJoin(Dedup.recallCounts(exact.select($"q_id", $"n_id"),
-        ivfPqTopK(s, d, k).select($"q_id", $"n_id"), Seq("q_id", "n_id")))
-      .select($"n_queries",
-        ($"n_found" >= $"n_exact" * floor).cast("long").as("recall_ok"))
-  }
+      floor: Double = 0.22): DataFrame =
+    Dedup.topKRecall(bruteTopKShared(s, d, k), ivfPqTopK(s, d, k), floor)
 
   def pqTopK(s: SparkSession, d: String, k: Int = 5): DataFrame = {
     val e = Tables.embeddings(s, d)
@@ -1285,15 +1264,8 @@ object SimSearch {
     * exact re-rank recovers 0.64 / 0.58 / 0.44 at
     * sf0.001 / 0.01 / 0.1. Floor 0.35 ≈ 0.8× the min measured. */
   def pqRecall(s: SparkSession, d: String, k: Int = 5,
-      floor: Double = 0.35): DataFrame = {
-    import s.implicits._
-    val exact = bruteTopKShared(s, d, k)
-    exact.agg(count_distinct($"q_id").as("n_queries"))
-      .crossJoin(Dedup.recallCounts(exact.select($"q_id", $"n_id"),
-        pqTopK(s, d, k).select($"q_id", $"n_id"), Seq("q_id", "n_id")))
-      .select($"n_queries",
-        ($"n_found" >= $"n_exact" * floor).cast("long").as("recall_ok"))
-  }
+      floor: Double = 0.35): DataFrame =
+    Dedup.topKRecall(bruteTopKShared(s, d, k), pqTopK(s, d, k), floor)
 
   // ------------------------------------------------ driver-visible recall
   // Round 1 left the approximate paths rows-only; their recall bounds
@@ -1346,15 +1318,8 @@ object SimSearch {
   /** Global LSH recall floor (per-query bounds don't hold on uniform
     * data — some buckets legitimately miss). Output one row
     * (n_queries, recall_ok); n_queries is independently SQL-checkable. */
-  def lshRecall(s: SparkSession, d: String, k: Int = 5, floor: Double = 0.5): DataFrame = {
-    import s.implicits._
-    val exact = bruteTopKShared(s, d, k)
-    exact.agg(count_distinct($"q_id").as("n_queries"))
-      .crossJoin(Dedup.recallCounts(exact.select($"q_id", $"n_id"),
-        lshTopK(s, d, k).select($"q_id", $"n_id"), Seq("q_id", "n_id")))
-      .select($"n_queries",
-        ($"n_found" >= $"n_exact" * floor).cast("long").as("recall_ok"))
-  }
+  def lshRecall(s: SparkSession, d: String, k: Int = 5, floor: Double = 0.5): DataFrame =
+    Dedup.topKRecall(bruteTopKShared(s, d, k), lshTopK(s, d, k), floor)
 
   /** Radius threshold for [[rangeSearch]] — all neighbors at cosine ≥ τ,
     * however many there are (vs top-k's fixed count). */

@@ -1,7 +1,9 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Row, SaveMode, SparkSession}
+import org.apache.spark.sql.execution.streaming.checkpointing.FileSystemBasedCheckpointFileManager
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery, Trigger}
 import org.apache.spark.sql.types.StructType
 import graft.core.{SessionArtifacts, Tables}
 
@@ -15,8 +17,8 @@ import graft.core.{SessionArtifacts, Tables}
   * validates real streaming plans against the batch oracle (stream/batch
   * equivalence is the Dataflow-model check). The RocksDB state-store
   * provider — the one that survives production state sizes — is wired
-  * behind SPARK_GRAFT_ROCKSDB=1 (see [[useRocksDb]] for why it cannot
-  * run in this sandbox).
+  * behind SPARK_GRAFT_ROCKSDB=1 (see [[useRocksDb]]). Every query starts
+  * and runs through [[runQuery]].
   *
   * Modes: the three windowed aggregations run in `complete` mode
   * (nothing withheld by the watermark, so the sink equals the batch
@@ -89,24 +91,7 @@ object Streams {
       .withColumn("ts", timestamp_micros(col("ts")))
   }
 
-  /** Streaming state-store count = shuffle partitions AT QUERY START;
-    * size it to the stream's key cardinality, not the batch default — an
-    * oversized store count just multiplies per-batch fixed costs: every
-    * batch pays store-open + commit PER PARTITION per stateful operator
-    * (a stream-stream join keeps four stores per partition). Round 14
-    * dropped the family default 8 → 4 — the fixture's state keys are a
-    * handful of event types / users per window, and the measured suite
-    * cost fell ~16% with results invariant (partitioning never changes a
-    * keyed aggregation's answer). At production scale this is
-    * throughput-derived, thousands for a hot stream; the conf is
-    * restored after the query starts. */
-  private def withStatePartitions[T](s: SparkSession, n: Int)(body: => T): T = {
-    val prev = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions", n.toString)
-    try body finally s.conf.set("spark.sql.shuffle.partitions", prev)
-  }
-
-  /** State store: the RocksDB provider (spillable, incremental
+  /** The RocksDB state-store provider (spillable, incremental
     * checkpoints) is the store that survives a real unbounded stream —
     * the default in-memory HDFS-backed store is the first thing to fall
     * over at production state sizes. Opt-in via SPARK_GRAFT_ROCKSDB=1.
@@ -118,27 +103,72 @@ object Streams {
     * errors, comparable latencies), and `RocksDbSpec` asserts in CI that
     * a RocksDB-backed windowed agg reports rocksdb state-store metrics
     * and matches the default-store result. The env var stays opt-in only
-    * so recorded bench baselines keep comparing like-to-like stores. */
-  private def useRocksDb(s: SparkSession): Unit =
-    if (sys.env.get("SPARK_GRAFT_ROCKSDB").contains("1"))
-      s.conf.set("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+    * so recorded bench baselines keep comparing like-to-like stores;
+    * measured, the store is not where per-batch time goes (the
+    * checkpoint manager is, see [[runQuery]]). */
+  private def useRocksDb: Boolean = sys.env.get("SPARK_GRAFT_ROCKSDB").contains("1")
 
-  private def runToTable(s: SparkSession, df: DataFrame, name: String, mode: String,
-      statePartitions: Int = 4): DataFrame =
-    withStatePartitions(s, statePartitions) {
-      useRocksDb(s)
-      val q = df.writeStream.outputMode(mode).format("memory").queryName(name).start()
-      try {
+  /** The one place a streaming query of this family starts and runs.
+    * Three session settings are pinned for the start only — a query
+    * keeps the confs it started with, and the session gets its own
+    * values back once `start` returns:
+    *
+    *  - 4 state partitions. The state-store count is the shuffle
+    *    partition count AT QUERY START; every batch pays store-open +
+    *    commit per partition per stateful operator (a stream-stream join
+    *    keeps four stores per partition), so the count is sized to the
+    *    stream's key cardinality, not the batch default. Round 14 dropped
+    *    the family default 8 → 4 with results invariant (partitioning
+    *    never changes a keyed aggregation's answer); at production scale
+    *    it is throughput-derived.
+    *  - Spark's `FileSystemBasedCheckpointFileManager` for the offset,
+    *    commit and state-store files. The default FileContext-based
+    *    manager goes through Hadoop's local file system, which without
+    *    the native libhadoop forks a `chmod` per file created and per
+    *    directory made, plus more per rename and status call: measured
+    *    at local[4] on 4 vCPUs, one warm `stream_dedup` call started
+    *    ~770 processes in 1.2–1.4 s with it and ~186 in 0.7–0.8 s with
+    *    this manager, Spark's own fallback, whose rename is atomic on
+    *    `file:`.
+    *  - the RocksDB provider when opted in ([[useRocksDb]]).
+    *
+    * A plain query then runs to the end of its input
+    * (`processAllAvailable`) and must have run ≥ [[Microbatches]]
+    * batches — the fixture must NOT have been absorbed as one batch;
+    * an `availableNow` query runs under `Trigger.AvailableNow` and stops
+    * itself at the input's current end. The query is stopped on return. */
+  private def runQuery(s: SparkSession, name: String, writer: DataStreamWriter[Row],
+      availableNow: Boolean = false): StreamingQuery = {
+    val pins = Seq(
+      "spark.sql.shuffle.partitions" -> "4",
+      "spark.sql.streaming.checkpointFileManagerClass" ->
+        classOf[FileSystemBasedCheckpointFileManager].getName) ++
+      Option.when(useRocksDb)("spark.sql.streaming.stateStore.providerClass" ->
+        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+    val prev = pins.map { case (k, _) => k -> s.conf.getOption(k) }
+    pins.foreach { case (k, v) => s.conf.set(k, v) }
+    val q = try {
+      val named = writer.queryName(name)
+      (if (availableNow) named.trigger(Trigger.AvailableNow()) else named).start()
+    } finally prev.foreach { case (k, v) => v.fold(s.conf.unset(k))(s.conf.set(k, _)) }
+    try {
+      if (availableNow) q.awaitTermination()
+      else {
         q.processAllAvailable()
-        // the multi-microbatch contract: the fixture must NOT have been
-        // absorbed as one batch (batch ids start at 0)
+        // batch ids start at 0
         require(q.lastProgress != null && q.lastProgress.batchId >= Microbatches - 1,
           s"$name ran ${if (q.lastProgress == null) "no" else q.lastProgress.batchId + 1} " +
           s"batches; expected >= $Microbatches")
-      } finally q.stop()
-      s.table(name)
-    }
+      }
+    } finally q.stop()
+    q
+  }
+
+  private def runToTable(s: SparkSession, df: DataFrame, name: String,
+      mode: String): DataFrame = {
+    runQuery(s, name, df.writeStream.outputMode(mode).format("memory"))
+    s.table(name)
+  }
 
   /** Tumbling 1-day windows per event_type: count + exact-cents sum. */
   def tumbling(s: SparkSession, d: String): DataFrame = {
@@ -234,7 +264,6 @@ object Streams {
     * sharded by the same shuffle as the aggregation. */
   def availableNow(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    import org.apache.spark.sql.streaming.Trigger
     val staged = stagedEventsDir(s, d)
     val slices = {
       val l = java.nio.file.Files.list(java.nio.file.Paths.get(staged))
@@ -255,8 +284,7 @@ object Streams {
     }
     val schema = StructType.fromDDL(
       "event_id BIGINT, ts BIGINT, user_id BIGINT, event_type STRING, value DOUBLE, props STRING")
-    def runOnce(tag: String): (DataFrame, Long) = withStatePartitions(s, 4) {
-      useRocksDb(s)
+    def runOnce(tag: String): (DataFrame, Long) = {
       val agg = s.readStream.schema(schema)
         .option("maxFilesPerTrigger", "1")
         .parquet(src.toString)
@@ -267,14 +295,9 @@ object Streams {
              (sum(round($"value" * 100).cast("bigint")) / 100.0).as("total"))
         .select($"window.start".as("w_start"), $"event_type", $"n", $"total")
       val name = s"graft_stream_available_now_$tag"
-      val q = agg.writeStream.outputMode("complete").format("memory")
-        .queryName(name)
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination() // AvailableNow self-terminates at the boundary
-      val read = q.recentProgress.map(_.numInputRows).sum
-      (s.table(name), read)
+      val q = runQuery(s, name, agg.writeStream.outputMode("complete").format("memory")
+        .option("checkpointLocation", ckpt), availableNow = true)
+      (s.table(name), q.recentProgress.map(_.numInputRows).sum)
     }
     (0 until Microbatches - 1).foreach(stage)
     val (_, firstRead) = runOnce("r1")
@@ -573,10 +596,7 @@ object Streams {
         $"c_user" === $"p_user" &&
         $"p_ts" >= $"c_ts" && $"p_ts" <= $"c_ts" + expr("INTERVAL 1 HOUR"))
       .select($"c_user".as("user_id"), $"click_id", $"purchase_id", $"amount")
-    // a stream-stream join commits TWO state stores per partition per
-    // batch — fixed costs scale with partitions × batches, so this query
-    // sizes the store count down to the fixture's throughput
-    runToTable(s, joined, "graft_stream_ss_join", "append", statePartitions = 4)
+    runToTable(s, joined, "graft_stream_ss_join", "append")
   }
 
   /** Watermarked stream-stream LEFT OUTER join — the shape that needs
@@ -603,7 +623,7 @@ object Streams {
         $"p_ts" >= $"c_ts" && $"p_ts" <= $"c_ts" + expr("INTERVAL 1 HOUR"),
         "left_outer")
       .select($"c_user".as("user_id"), $"click_id", $"purchase_id", $"amount")
-    runToTable(s, joined, "graft_stream_ss_left", "append", statePartitions = 4)
+    runToTable(s, joined, "graft_stream_ss_left", "append")
   }
 
   /** foreachBatch parquet sink — the production sink pattern: each
@@ -619,21 +639,12 @@ object Streams {
       .groupBy($"event_type")
       .agg(count(lit(1)).as("n"),
            (sum(round($"value" * 100).cast("bigint")) / 100.0).as("total"))
-    withStatePartitions(s, 4) {
-      useRocksDb(s)
-      val q = agg.writeStream.outputMode("complete")
-        .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-          // complete mode: every batch overwrites with the full-to-date
-          // answer — idempotent per batchId, so a replayed batch is safe
-          batch.write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(out)
-        }
-        .start()
-      try {
-        q.processAllAvailable()
-        require(q.lastProgress != null && q.lastProgress.batchId >= Microbatches - 1,
-          s"stream_sink_parquet ran too few batches")
-      } finally q.stop()
-    }
+    runQuery(s, "graft_stream_sink_parquet", agg.writeStream.outputMode("complete")
+      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
+        // complete mode: every batch overwrites with the full-to-date
+        // answer — idempotent per batchId, so a replayed batch is safe
+        batch.write.mode(SaveMode.Overwrite).parquet(out)
+      })
     s.read.parquet(out)
   }
 
@@ -690,7 +701,7 @@ object Streams {
         case None       => delta
         case Some(prev) => latestPerUser(delta.unionByName(s.read.parquet(s"$root/v$prev")))
       }
-      merged.write.mode(org.apache.spark.sql.SaveMode.Overwrite)
+      merged.write.mode(SaveMode.Overwrite)
         .parquet(s"$root/v$batchId")
     }
   }
@@ -704,19 +715,10 @@ object Streams {
     val stream = eventsStream(s, d).select($"user_id", $"ts".as("last_ts"),
       $"event_id".as("last_event_id"), $"event_type".as("last_type"),
       $"value".as("last_value"))
-    withStatePartitions(s, 4) {
-      useRocksDb(s)
-      val q = stream.writeStream.outputMode("append")
-        .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-          upsertMerge(s, rootPath)(batch.toDF(), batchId)
-        }
-        .start()
-      try {
-        q.processAllAvailable()
-        require(q.lastProgress != null && q.lastProgress.batchId >= Microbatches - 1,
-          s"stream_upsert_sink ran too few batches")
-      } finally q.stop()
-    }
+    runQuery(s, "graft_stream_upsert_sink", stream.writeStream.outputMode("append")
+      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
+        upsertMerge(s, rootPath)(batch.toDF(), batchId)
+      })
     s.read.parquet(s"$root/v${upsertCompleteVersions(rootPath).max}").drop("last_event_id")
   }
 
@@ -863,23 +865,14 @@ object Streams {
           .otherwise($"props"))
       .withColumn("k", get_json_object($"raw", "$.k"))
       .select($"event_id", $"event_type", $"k")
-    withStatePartitions(s, 4) {
-      useRocksDb(s)
-      val q = src.writeStream.outputMode("append")
-        .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-          val b = batch.toDF().localCheckpoint(eager = false) // two consumers, one compute
-          b.where(col("k").isNotNull).write
-            .mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(s"$root/good/b$batchId")
-          b.where(col("k").isNull).write
-            .mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(s"$root/dlq/b$batchId")
-        }
-        .start()
-      try {
-        q.processAllAvailable()
-        require(q.lastProgress != null && q.lastProgress.batchId >= Microbatches - 1,
-          s"stream_dead_letter ran too few batches")
-      } finally q.stop()
-    }
+    runQuery(s, "graft_stream_dead_letter", src.writeStream.outputMode("append")
+      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
+        val b = batch.toDF().localCheckpoint(eager = false) // two consumers, one compute
+        b.where(col("k").isNotNull).write
+          .mode(SaveMode.Overwrite).parquet(s"$root/good/b$batchId")
+        b.where(col("k").isNull).write
+          .mode(SaveMode.Overwrite).parquet(s"$root/dlq/b$batchId")
+      })
     def readSink(name: String) =
       s.read.option("recursiveFileLookup", "true").parquet(s"$root/$name")
         .select(lit(name).as("sink"), $"event_type")

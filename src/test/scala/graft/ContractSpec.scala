@@ -108,4 +108,24 @@ class ContractSpec extends AnyFunSuite {
       read(f.toString).contains("resetDir"))
     assert(resets.isEmpty, s"resetDir called outside core: ${resets.mkString(", ")}")
   }
+
+  /** Streaming queries start in one place, `Streams.runQuery`, which pins
+    * the state-partition count and the checkpoint manager for the start:
+    * a query started anywhere else would silently run without them. */
+  test("only Streams.runQuery starts a streaming query") {
+    import java.nio.file.{Files, Paths}
+    import scala.jdk.CollectionConverters._
+    val streams = Paths.get("src/main/scala/graft/streaming/Streams.scala")
+    val sources = Files.walk(Paths.get("src/main")).iterator().asScala
+      .filter(p => p.toString.endsWith(".scala")).toSeq
+    val elsewhere = sources.filter(f => f != streams && read(f.toString).contains("writeStream"))
+    assert(elsewhere.isEmpty, s"writeStream outside Streams: ${elsewhere.mkString(", ")}")
+    val text = read(streams.toString)
+    val runner = text.indexOf("private def runQuery(")
+    assert(runner >= 0, "Streams lost its runQuery")
+    val runnerEnd = text.indexOf("\n  }\n", runner)
+    val starts = """\.(start|toTable)\(""".r.findAllMatchIn(text).map(_.start).toSeq
+    assert(starts.nonEmpty && starts.forall(i => i > runner && i < runnerEnd),
+      s"a streaming query starts outside runQuery at offsets ${starts.filter(i => i < runner || i > runnerEnd)}")
+  }
 }

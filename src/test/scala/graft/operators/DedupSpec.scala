@@ -214,4 +214,45 @@ class DedupSpec extends SparkSpec {
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(got2 === got)
   }
+
+  test("verifyJaccard evaluates its pairs input once") {
+    import spark.implicits._
+    val docs = docsDf(Seq(1L -> base, 2L -> (base + " today"),
+      3L -> (base + " again"), 4L -> "an unrelated document about parquet row groups"))
+    val rows = spark.sparkContext.longAccumulator("pair rows")
+    val tick = udf { (a: Long) => rows.add(1); a }.asNondeterministic()
+    val raw = Seq((1L, 2L), (1L, 3L), (2L, 3L), (3L, 4L), (1L, 4L))
+    val pairs = spark.sparkContext.parallelize(raw, 2).toDF("a", "b")
+      .select(tick($"a").as("a"), $"b")
+    val got = Dedup.verifyJaccard(pairs, docs, Dedup.charShingles($"text", 12)).collect()
+    assert(got.map(r => (r.getLong(0), r.getLong(1))).toSet == raw.toSet)
+    assert(rows.value == raw.size, s"${rows.value} pair-row evaluations for ${raw.size} pairs")
+  }
+
+  /** recallCounts against its left-semi reference formulation:
+    * n_exact = |exact|, n_found = |exact ⋉ approx| on `keys`. */
+  test("recallCounts equals the left-semi counts on random frames") {
+    import spark.implicits._
+    val rnd = new scala.util.Random(17)
+    def frame(n: Int) = Seq.fill(n)((
+      if (rnd.nextInt(12) == 0) None else Some(rnd.nextInt(8).toLong),
+      rnd.nextInt(3).toLong)).toDF("q_id", "n_id")
+    val cases = Seq.fill(6)((frame(40), frame(40))) ++ Seq(
+      (frame(0), frame(30)), // empty exact
+      (frame(30), frame(0)), // empty approx
+      (frame(0), frame(0)),
+      (frame(30), frame(30).select(($"q_id" + 100).as("q_id"), $"n_id"))) // disjoint
+    cases.foreach { case (exact, approx) =>
+      val keys = Seq("q_id", "n_id")
+      val want = (exact.count(), exact.join(approx, keys, "left_semi").count())
+      val r = Dedup.recallCounts(exact, approx, keys).collect()
+      assert(r.length == 1)
+      assert((r(0).getAs[Long]("n_exact"), r(0).getAs[Long]("n_found")) == want)
+      val ok = Dedup.topKRecall(exact, approx, 0.5).collect()
+      assert(ok.length == 1)
+      assert(ok(0).getAs[Long]("n_queries") ==
+        exact.where($"q_id".isNotNull).select($"q_id").distinct().count())
+      assert(ok(0).getAs[Long]("recall_ok") == (if (want._2 >= want._1 * 0.5) 1L else 0L))
+    }
+  }
 }

@@ -3,7 +3,8 @@ package graft.operators
 import graft.SparkSpec
 
 /** Job cost of the two driver loops: one connected-components round and
-  * one graph-ANN hop are exactly one Spark job each (jobs counted by
+  * one graph-ANN hop are exactly one Spark job each, and a recall bound
+  * over a search adds a fixed few (jobs counted by
   * [[graft.SparkSpec.jobsOf]]). */
 class RoundJobsSpec extends SparkSpec {
 
@@ -62,5 +63,14 @@ class RoundJobsSpec extends SparkSpec {
     val one = jobsOf(SimSearch.graphAnnTopK(spark, sf, rounds = 1).collect())
     val five = jobsOf(SimSearch.graphAnnTopK(spark, sf, rounds = 5).collect())
     assert(five - one == 4, s"rounds=1: $one jobs, rounds=5: $five jobs")
+  }
+
+  test("a warm graph-ANN recall costs its hops plus a fixed few jobs") {
+    SimSearch.graphAnnRecall(spark, sf).collect() // builds the session artifacts
+    val jobs = jobsOf(SimSearch.graphAnnRecall(spark, sf).collect())
+    // the search costs rounds + 2; the recall bound reads the exact and
+    // approximate top-k once each, in one aggregate
+    assert(jobs <= SimSearch.GraphAnnRounds + 5,
+      s"$jobs jobs at ${SimSearch.GraphAnnRounds} rounds")
   }
 }

@@ -1,35 +1,11 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // suite-sized codegen class cache (round-15; see Bench scaladoc) —
-      // the 325-query dump recompiled every stage under the 100-entry
-      // default; static conf, so it must be set before getOrCreate
-      .config("spark.sql.codegen.cache.maxEntries",
-        sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE", "4096"))
-      // optional pressure knobs (spill-gate runs — see SCALE.md "measured
-      // spill"): SPARK_GRAFT_MEMFRAC shrinks the unified region,
-      // SPARK_GRAFT_PAGESIZE shrinks task pages so irreducible initial
-      // allocations fit a tiny per-task budget; unset = Spark defaults
-      .config(sys.env.get("SPARK_GRAFT_MEMFRAC")
-        .map(f => Map("spark.memory.fraction" -> f)).getOrElse(Map.empty[String, String]))
-      .config(sys.env.get("SPARK_GRAFT_PAGESIZE")
-        .map(p => Map("spark.buffer.pageSize" -> p)).getOrElse(Map.empty[String, String]))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // keep the driver's small stdout-tail capture free of the known-benign
-    // bounded-frame window warnings (round-14; see Bench scaladoc)
-    Bench.silenceWindowWarnings()
+    val spark = graft.core.Session.local()
     new java.io.File(outDir).mkdirs()
     // SPARK_GRAFT_ONLY=q1,q2 — dump (and list oracle SQL for) a subset;
     // unset for the driver's full run. oracle_sql.json is filtered to the

@@ -128,4 +128,45 @@ class ContractSpec extends AnyFunSuite {
     assert(starts.nonEmpty && starts.forall(i => i > runner && i < runnerEnd),
       s"a streaming query starts outside runQuery at offsets ${starts.filter(i => i < runner || i > runnerEnd)}")
   }
+
+  private def mainSources: Seq[java.nio.file.Path] = {
+    import scala.jdk.CollectionConverters._
+    java.nio.file.Files.walk(java.nio.file.Paths.get("src/main")).iterator().asScala
+      .filter(p => p.toString.endsWith(".scala")).toSeq
+  }
+
+  /** Sessions come from one factory, `graft.core.Session.local`, so every
+    * main runs the same engine settings. Two builders stay: `Sql.extSession`
+    * (the extensions-injected twin on an existing context) and `ChaosCheck`
+    * (its `local[4, 2]` task-retry master is the point of that check). */
+  test("only Session.local, Sql.extSession and ChaosCheck build a SparkSession") {
+    val allowed = Set("src/main/scala/graft/core/Session.scala",
+      "src/main/scala/graft/operators/Sql.scala", "src/main/scala/graft/tools/ChaosCheck.scala")
+    val builders = mainSources.filter(f => read(f.toString).contains("SparkSession.builder"))
+    assert(builders.map(_.toString).toSet.subsetOf(allowed),
+      s"SparkSession.builder outside the session factory: ${builders.mkString(", ")}")
+    val sql = read("src/main/scala/graft/operators/Sql.scala")
+    val ext = sql.indexOf("private def extSession(")
+    assert(ext >= 0, "Sql lost its extSession")
+    val extEnd = sql.indexOf("\n\n", ext)
+    val at = "SparkSession\\.builder".r.findAllMatchIn(sql).map(_.start).toSeq
+    assert(at.forall(i => i > ext && i < extEnd), s"Sql builds a session outside extSession at $at")
+  }
+
+  /** Every environment variable the program reads is named here, so a new
+    * knob fails this test and is seen in review. */
+  test("src/main reads only the allowlisted environment variables") {
+    val allowlist = Set("SPARK_GRAFT_SF_DIR", "SPARK_GRAFT_CPUS", "SPARK_GRAFT_ONLY",
+      "SPARK_GRAFT_REPS", "SPARK_GRAFT_BUDGET_SEC", "SPARK_GRAFT_WARMUP",
+      "SPARK_GRAFT_SQL_ONLY", "SPARK_GRAFT_ROCKSDB")
+    val named = """(?:sys\.env(?:\.get|\.getOrElse|\.contains)?|System\.getenv)\("([^"]+)"""".r
+    val reads = for {
+      f <- mainSources
+      text = read(f.toString)
+      site <- """sys\.env|getenv""".r.findAllMatchIn(text)
+    } yield named.findPrefixMatchOf(text.substring(site.start)).map(_.group(1))
+      .getOrElse(s"<unnamed read in ${f.getFileName}>")
+    val unknown = reads.toSet -- allowlist
+    assert(unknown.isEmpty, s"environment reads outside the allowlist: ${unknown.toSeq.sorted.mkString(", ")}")
+  }
 }

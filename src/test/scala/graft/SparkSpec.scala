@@ -6,18 +6,7 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Shared session for all suites (one JVM-wide session; suites run in one
   * forked JVM under `Test / fork := true`). */
 object SparkSpec {
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  lazy val spark: SparkSession = graft.core.Session.local(4)
   val SF = "/root/testdata/sf0.001"
 }
 
